@@ -65,6 +65,7 @@ def _run_kg_pipeline_light(spark: SparkSession, sf_dir: str):
 
     from gitnexus_spark.operators.components import canonical_entities
     from gitnexus_spark.operators.linking import (entity_registry,
+                                                  fuzzy_links,
                                                   name_resolution_map)
 
     pages = synth_pages(spark, sf_dir)
@@ -79,12 +80,8 @@ def _run_kg_pipeline_light(spark: SparkSession, sf_dir: str):
         .dropDuplicates(["name"])
     )
     nmap = name_resolution_map(names, registry, ad).localCheckpoint()
-    fuzzy_linked = nmap.filter(
-        F.col("c_alias").isNull() & F.col("c_exact").isNull()
-        & F.col("c_fuzzy").isNotNull()
-    ).select("name", F.col("c_fuzzy").alias("canonical_name"),
-             F.lit("fuzzy").alias("stage"))
-    canon = canonical_entities(registry, fuzzy_linked, ad).localCheckpoint()
+    canon = canonical_entities(registry, fuzzy_links(nmap),
+                               ad).localCheckpoint()
     out = (pages, ext, men, tri, registry, nmap, canon)
     _KG_CACHE[key] = out
     return out
@@ -1939,9 +1936,9 @@ def q_kg_fuzzy_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 'Zq{gg}.Brand' homed in /s7/. Sites in /s3/ pick the '_' variant
     (url_dist 1 beats 2); every other site picks the '.' variant (either
     by distance in /s7/ or by the deterministic cand-ASC tie at 2/2).
-    Exercises the production fuzzy_candidates_all + site_fuzzy_map path
+    Exercises the production fuzzy_candidates + site_fuzzy_map path
     used by KGPipeline pass 3."""
-    from gitnexus_spark.operators.linking import (fuzzy_candidates_all,
+    from gitnexus_spark.operators.linking import (fuzzy_candidates,
                                                   site_fuzzy_map)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1961,7 +1958,7 @@ def q_kg_fuzzy_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("Zq"), F.col("gg"), F.lit(".Brand")).alias("name"),
         F.lit("https://w.example.org/s7/a.html").alias("first_doc"),
     ))
-    cands = fuzzy_candidates_all(probes, registry, fuzzy_threshold=0.4)
+    cands = fuzzy_candidates(probes, registry, fuzzy_threshold=0.4)
     return site_fuzzy_map(probes, cands).select("doc_url", "name", "c_fuzzy")
 
 

@@ -25,7 +25,3 @@ def edge_id(edge_type: Column | str, src: Column, dst: Column) -> Column:
     t = F.lit(edge_type) if isinstance(edge_type, str) else edge_type
     return F.md5(F.concat_ws(SEP, t, src, dst))
 
-
-# DuckDB oracle fragment builders (same byte inputs -> same md5 hex)
-def sql_node_id(label_sql: str, key_sql: str) -> str:
-    return f"md5({label_sql} || '{SEP}' || {key_sql})"

@@ -47,6 +47,7 @@ operators/components.py.
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -229,13 +230,18 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
         # driver threads so their per-iteration jobs interleave (the
         # iterative loop is driver-latency-bound, not core-bound; the
         # same reason the pipeline overlaps its pass-3/4 commits)
+        # (each thread keeps the caller's job group and local properties:
+        # inheritable_thread_target, one copy per submit)
         from concurrent.futures import ThreadPoolExecutor
+
+        def reach(edges: DataFrame):
+            return pool.submit(
+                inheritable_thread_target(init.sparkSession)(_min_reach),
+                init, edges, max_iters)
         with ThreadPoolExecutor(2) as pool:
-            f_fwd = pool.submit(_min_reach, init, e, max_iters)
-            f_bwd = pool.submit(
-                _min_reach, init,
-                e.select(F.col("t").alias("s"), F.col("s").alias("t")),
-                max_iters)
+            f_fwd = reach(e)
+            f_bwd = reach(e.select(F.col("t").alias("s"),
+                                   F.col("s").alias("t")))
             fwd, bwd = f_fwd.result(), f_bwd.result()
         assigned = (fwd.join(bwd.withColumnRenamed("lbl", "_b"), "v")
                     .filter(F.col("lbl") == F.col("_b"))

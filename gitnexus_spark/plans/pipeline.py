@@ -34,15 +34,18 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ids import edge_id, node_id
 from ..operators import extract as ex
 from ..operators.components import canonical_entities
-from ..operators.linking import (entity_registry, exact_resolution_map,
-                                 fuzzy_candidates_all, fuzzy_top1,
-                                 site_fuzzy_map, stage_columns)
+from ..operators.linking import (TOP_PER_NAME, entity_registry,
+                                 exact_resolution_map, fuzzy_links,
+                                 fuzzy_probe, missed_candidates,
+                                 site_fuzzy_map, stage_columns,
+                                 with_fuzzy_top1)
 from ..operators.structure import structure_graph
 from .hints import (EST_ROW_BYTES, BROADCAST_MAX_BYTES, PARQUET_INFLATION,
                     broadcast_if_small, dir_bytes)
@@ -52,25 +55,8 @@ def _table(out_dir: str, name: str) -> str:
     return os.path.join(out_dir, name)
 
 
-EMPTY_CANDS_DDL = ("name string, cand string, cand_doc string,"
-                   " jaccard double")
 EMPTY_SITE_DDL = ("doc_url string, name string, c_fuzzy string,"
                   " fuzzy_score double")
-
-
-def build_fuzzy_candidates(spark: SparkSession, name_map_exact: DataFrame,
-                           registry: DataFrame) -> DataFrame:
-    """The ONE gram-blocking join of a run: all capped fuzzy candidates
-    for names both exact stages missed. Committed as its own table so
-    (a) the global top-1 (name_links.c_fuzzy) and the per-site re-rank
-    both derive from it without re-blocking, and (b) the incremental
-    refresh can delta-maintain it when registry rows change."""
-    unresolved = name_map_exact.filter(
-        F.col("c_alias").isNull() & F.col("c_exact").isNull()
-    ).select("name")
-    if unresolved.isEmpty():
-        return spark.createDataFrame([], EMPTY_CANDS_DDL)
-    return fuzzy_candidates_all(unresolved, registry)
 
 
 def build_fuzzy_site(spark: SparkSession, raw_triples: DataFrame,
@@ -78,17 +64,15 @@ def build_fuzzy_site(spark: SparkSession, raw_triples: DataFrame,
                      dim_hint=None) -> DataFrame:
     """Pass 3a': per-call-site fuzzy resolution (reference scores fuzzy
     candidates PER CALL SITE with import distance,
-    call-processor.ts:305-323). The gram-blocking join already ran
-    (build_fuzzy_candidates); only the small per-name candidate lists
-    are re-ranked against each site's URL locality. Sites = distinct
-    (doc_url, endpoint) pairs restricted to names both exact stages
-    missed. dim_hint(df, row_factor) applies the size-gated broadcast
-    decision (identity when absent)."""
+    call-processor.ts:305-323). The gram-blocking join already ran (the
+    committed fuzzy_candidates table); only the small per-name candidate
+    lists are re-ranked against each site's URL locality. Sites =
+    distinct (doc_url, endpoint) pairs restricted to names both exact
+    stages missed. dim_hint(df, row_factor) applies the size-gated
+    broadcast decision (identity when absent)."""
     h = dim_hint or (lambda df, row_factor=1: df)
-    unresolved = name_map.filter(
-        F.col("c_alias").isNull() & F.col("c_exact").isNull()
-    ).select("name")
-    if unresolved.isEmpty():
+    unresolved = fuzzy_probe(name_map)
+    if unresolved is None:
         return spark.createDataFrame([], EMPTY_SITE_DDL)
     sites = (
         raw_triples.select("doc_url", F.col("subj").alias("name"))
@@ -97,26 +81,26 @@ def build_fuzzy_site(spark: SparkSession, raw_triples: DataFrame,
         .join(h(unresolved), "name", "left_semi")
         .dropDuplicates(["doc_url", "name"])
     )
-    # candidate lists are capped at 8 per unresolved name
-    return site_fuzzy_map(sites, h(cands, row_factor=8))
+    # candidate lists are capped at TOP_PER_NAME per unresolved name
+    return site_fuzzy_map(sites, h(cands, row_factor=TOP_PER_NAME))
 
 
 def resolve_triples(raw_triples: DataFrame, name_map: DataFrame,
                     canon: DataFrame, fuzzy_site: DataFrame,
                     dim_hint=None) -> DataFrame:
-    """Pass 3c: resolve triple endpoints. Stage precedence (alias >
-    same_doc > name_exact > fuzzy > failed) mirrors the reference; the
-    final canonical applies the CC merge on top of the STAGE-RESOLVED
-    name. For alias/same_doc/exact stages cc(resolved) == cc(raw name)
-    (alias edges are CC inputs; exact/same_doc resolve to the name
-    itself), so self_cc covers them; the per-site fuzzy winner can be
-    OUTSIDE the raw name's component — its cc rides on the fuzzy_site
-    rows (attached on the candidate dimension, not the fact table).
-    Name maps broadcast only when dim_hint's size gate says so; the site
-    map is keyed (doc_url, name) like the fact table and joins without a
-    forced broadcast (AQE picks; at scale both sides are co-keyed).
-    Shared by KGPipeline.run and the incremental refresh path — one
-    implementation, no drift."""
+    """Pass 3c: resolve triple endpoints. The stage (stage_columns: alias
+    > same_doc > name_exact > fuzzy > failed) picks the final canonical,
+    which applies the CC merge on top of the STAGE-RESOLVED name. For
+    alias/same_doc/exact stages cc(resolved) == cc(raw name) (alias
+    edges are CC inputs; exact/same_doc resolve to the name itself), so
+    self_cc covers them; the per-site fuzzy winner can be OUTSIDE the
+    raw name's component — its cc rides on the fuzzy_site rows (attached
+    on the candidate dimension, not the fact table); a failed endpoint
+    keeps its raw form. Name maps broadcast only when dim_hint's size
+    gate says so; the site map is keyed (doc_url, name) like the fact
+    table and joins without a forced broadcast (AQE picks; at scale both
+    sides are co-keyed). Shared by KGPipeline.run and the incremental
+    refresh path — one implementation, no drift."""
     h = dim_hint or (lambda df: df)
     smap = name_map.join(canon, "name", "left").select(
         "name", "c_alias", "c_exact",
@@ -128,43 +112,30 @@ def resolve_triples(raw_triples: DataFrame, name_map: DataFrame,
     ).select("doc_url", "name", "c_fuzzy",
              F.coalesce("fuzzy_cc", "c_fuzzy").alias("fuzzy_cc"))
 
-    smap_s = smap.select(F.col("name").alias("subj"),
-                         *[F.col(c).alias(f"s_{c}") for c in
-                           ["c_alias", "c_exact", "self_cc"]])
-    smap_o = smap.select(F.col("name").alias("obj"),
-                         *[F.col(c).alias(f"o_{c}") for c in
-                           ["c_alias", "c_exact", "self_cc"]])
-    fz_s = fz.select("doc_url", F.col("name").alias("subj"),
-                     F.col("c_fuzzy").alias("s_c_fuzzy"),
-                     F.col("fuzzy_cc").alias("s_fuzzy_cc"))
-    fz_o = fz.select("doc_url", F.col("name").alias("obj"),
-                     F.col("c_fuzzy").alias("o_c_fuzzy"),
-                     F.col("fuzzy_cc").alias("o_fuzzy_cc"))
+    def side(role: str, p: str):
+        """Per-endpoint (map, site map, final, stage, confidence)."""
+        m = smap.select(F.col("name").alias(role),
+                        *[F.col(c).alias(f"{p}_{c}") for c in
+                          ["c_alias", "c_exact", "self_cc"]])
+        f = fz.select("doc_url", F.col("name").alias(role),
+                      F.col("c_fuzzy").alias(f"{p}_c_fuzzy"),
+                      F.col("fuzzy_cc").alias(f"{p}_fuzzy_cc"))
+        _, stage, conf = stage_columns(
+            F.col(f"{p}_c_alias"),
+            F.coalesce(f"{role}_samedoc", F.lit(False)),
+            F.col(f"{p}_c_exact"), F.col(f"{p}_c_fuzzy"), F.col(role))
+        final = (F.when(stage == "fuzzy", F.col(f"{p}_fuzzy_cc"))
+                 .when(stage == "failed", F.col(role))
+                 .otherwise(F.col(f"{p}_self_cc")))
+        return m, f, final, stage, conf
+
+    s_map, s_fz, s_final, s_stage, s_conf = side("subj", "s")
+    o_map, o_fz, o_final, o_stage, o_conf = side("obj", "o")
     t = (raw_triples
-         .join(h(smap_s), "subj", "left")
-         .join(h(smap_o), "obj", "left")
-         .join(fz_s, ["doc_url", "subj"], "left")
-         .join(fz_o, ["doc_url", "obj"], "left"))
-    s_samedoc = F.coalesce("subj_samedoc", F.lit(False))
-    o_samedoc = F.coalesce("obj_samedoc", F.lit(False))
-    _, s_stage, s_conf = stage_columns(
-        F.col("s_c_alias"), s_samedoc,
-        F.col("s_c_exact"), F.col("s_c_fuzzy"), F.col("subj"))
-    _, o_stage, o_conf = stage_columns(
-        F.col("o_c_alias"), o_samedoc,
-        F.col("o_c_exact"), F.col("o_c_fuzzy"), F.col("obj"))
-    s_final = (
-        F.when(F.col("s_c_alias").isNotNull() | s_samedoc
-               | F.col("s_c_exact").isNotNull(), F.col("s_self_cc"))
-        .when(F.col("s_c_fuzzy").isNotNull(), F.col("s_fuzzy_cc"))
-        .otherwise(F.col("subj"))
-    )
-    o_final = (
-        F.when(F.col("o_c_alias").isNotNull() | o_samedoc
-               | F.col("o_c_exact").isNotNull(), F.col("o_self_cc"))
-        .when(F.col("o_c_fuzzy").isNotNull(), F.col("o_fuzzy_cc"))
-        .otherwise(F.col("obj"))
-    )
+         .join(h(s_map), "subj", "left")
+         .join(h(o_map), "obj", "left")
+         .join(s_fz, ["doc_url", "subj"], "left")
+         .join(o_fz, ["doc_url", "obj"], "left"))
     return t.select(
         "doc_url", "pred",
         s_final.alias("subj"),
@@ -386,8 +357,15 @@ class KGPipeline:
         # so a caller that catches and re-runs (resume) can never race
         # a background write still holding the same table directory.
         with ThreadPoolExecutor(4) as pool:
-            f_sn = pool.submit(self._load_or, "struct_nodes", lambda: s_nodes_df)
-            f_se = pool.submit(self._load_or, "struct_edges", lambda: s_edges_df)
+            def commit_bg(name, builder, partition_by=None):
+                # the pool thread inherits this thread's job group and
+                # local properties — a fresh copy per submit, so one
+                # commit's kg: label never leaks into another's
+                return pool.submit(inheritable_thread_target(self.spark)(
+                    self._load_or), name, builder, partition_by)
+
+            f_sn = commit_bg("struct_nodes", lambda: s_nodes_df)
+            f_se = commit_bg("struct_edges", lambda: s_edges_df)
             registry = self._load_or("entities", p3_registry)
 
             # 3a: the name-keyed resolution map (alias / global-exact / fuzzy)
@@ -407,7 +385,7 @@ class KGPipeline:
                             raw_triples.select(F.col("obj").alias("name")))
                         .dropDuplicates(["name"])
                     )
-                    # persisted: the candidates isEmpty probe, the
+                    # persisted: the candidates' fuzzy_probe, the
                     # candidates build AND the name_links build all
                     # execute this vocabulary-scale plan — without the
                     # pin the endpoint distinct + registry join runs 3x
@@ -415,14 +393,16 @@ class KGPipeline:
                                                    self.alias_dict).persist())
                 return _m[0]
 
-            def p3_cands():
-                return build_fuzzy_candidates(self.spark, exact_map(), registry)
-            cands = self._load_or("fuzzy_candidates", p3_cands)
-
-            def p3_name_map():
-                top1 = fuzzy_top1(cands).select("name", "c_fuzzy")
-                return exact_map().join(top1, "name", "left")
-            name_map = self._load_or("name_links", p3_name_map)
+            # The ONE gram-blocking join of a run, committed as its own
+            # table so (a) the global top-1 (name_links.c_fuzzy) and the
+            # per-site re-rank both derive from it without re-blocking,
+            # and (b) the incremental refresh can delta-maintain it when
+            # registry rows change.
+            cands = self._load_or(
+                "fuzzy_candidates",
+                lambda: missed_candidates(exact_map(), registry))
+            name_map = self._load_or(
+                "name_links", lambda: with_fuzzy_top1(exact_map(), cands))
 
             # 3a': per-call-site fuzzy resolution (VERDICT r02 #2) — shared
             # implementation in build_fuzzy_site, re-ranking the committed
@@ -440,7 +420,7 @@ class KGPipeline:
             # fuzzy_site and canonical_map both depend only on name_map (+
             # registry): build and commit them CONCURRENTLY (r03 next-round
             # #1 — they were two of the three sequential pass-3 commits).
-            f_fz = pool.submit(self._load_or, "fuzzy_site_links", p3_fuzzy_site)
+            f_fz = commit_bg("fuzzy_site_links", p3_fuzzy_site)
 
             # 3b: coreference merge over the entity dimension (CC union-find).
             # The canonical map must cover the FULL endpoint-name universe, not
@@ -450,11 +430,6 @@ class KGPipeline:
             # p3_resolved keeps the raw form while pass 4 materializes no node
             # for it -> dangling predicate edges (ADVICE r02, medium).
             def p3_canon():
-                fuzzy_linked = name_map.filter(
-                    F.col("c_alias").isNull() & F.col("c_exact").isNull()
-                    & F.col("c_fuzzy").isNotNull()
-                ).select("name", F.col("c_fuzzy").alias("canonical_name"),
-                         F.lit("fuzzy").alias("stage"))
                 endpoint_names = name_map.select(
                     "name", F.lit(None).cast("string").alias("canonical_name"),
                     F.lit("endpoint").alias("stage"))
@@ -467,24 +442,15 @@ class KGPipeline:
                             F.lit("endpoint").alias("stage"))
                 return canonical_entities(
                     registry,
-                    fuzzy_linked.unionByName(endpoint_names)
+                    fuzzy_links(name_map).unionByName(endpoint_names)
                                 .unionByName(used_targets),
                     self.alias_dict)
             canon = self._load_or("canonical_map", p3_canon)
             fuzzy_site = f_fz.result()
 
-            # 3c: resolve triple endpoints. Stage precedence (alias > same_doc >
-            # name_exact > fuzzy > failed) mirrors the reference; the final
-            # canonical applies the CC merge on top of the STAGE-RESOLVED name.
-            # For alias/same_doc/exact stages cc(resolved) == cc(raw name)
-            # (alias edges are CC inputs; exact/same_doc resolve to the name
-            # itself), so self_cc covers them; the per-site fuzzy winner can be
-            # OUTSIDE the raw name's component — its cc rides on the fuzzy_site
-            # rows (attached on the candidate dimension, not the fact table).
-            # Name maps broadcast ONLY when their observed size fits the gate
-            # (_dim_hint; unhinted name-keyed shuffle join otherwise); the
-            # site map is keyed (doc_url, name) like the fact table and joins
-            # without a forced broadcast (AQE picks; at scale both co-keyed).
+            # 3c: resolve triple endpoints (resolve_triples); name maps
+            # broadcast ONLY when their observed size fits the gate
+            # (_dim_hint; unhinted name-keyed shuffle join otherwise).
             def p3_resolved():
                 return resolve_triples(
                     raw_triples, name_map, canon, fuzzy_site,
@@ -593,8 +559,8 @@ class KGPipeline:
             for df in struct_caches:
                 df.unpersist()
             # nodes and edges are independent given resolved+canon: overlap them
-            f_nodes = pool.submit(self._load_or, "nodes", p4_nodes, ["label"])
-            f_edges = pool.submit(self._load_or, "edges", p4_edges, ["type"])
+            f_nodes = commit_bg("nodes", p4_nodes, ["label"])
+            f_edges = commit_bg("edges", p4_edges, ["type"])
             nodes, edges = f_nodes.result(), f_edges.result()
             if _m:  # release the exact-map pin (commits all landed)
                 _m[0].unpersist()

@@ -44,8 +44,9 @@ from pyspark.sql import functions as F
 from ..functions.ids import edge_id, node_id
 from ..operators import extract as ex
 from ..operators.components import NORM_KEY_SQL, canonical_entities
-from ..operators.linking import (entity_registry, exact_resolution_map,
-                                 fuzzy_candidates_all, fuzzy_top1)
+from ..operators.linking import (entity_registry, exact_missed,
+                                 exact_resolution_map, fuzzy_candidates,
+                                 fuzzy_links, with_fuzzy_top1)
 from ..operators.structure import normalize_link_targets, structure_graph
 from ..sources.snapshots import SnapshotWriter
 from .pipeline import build_fuzzy_site, resolve_triples
@@ -162,13 +163,11 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
     gone_ep = cand_gone.join(still_used, "name", "left_anti") \
         .localCheckpoint()
 
-    unres_ep = m_ep.filter(F.col("c_alias").isNull()
-                           & F.col("c_exact").isNull()).select("name")
-    resolved_now = m_ep.filter(F.col("c_alias").isNotNull()
-                               | F.col("c_exact").isNotNull()).select("name")
+    unres_ep = m_ep.filter(exact_missed()).select("name")
+    resolved_now = m_ep.filter(~exact_missed()).select("name")
     unresolved_global = (
-        nl_old.filter(F.col("c_alias").isNull() & F.col("c_exact").isNull())
-        .select("name").join(_b(ep_all), "name", "left_anti")
+        nl_old.filter(exact_missed()).select("name")
+        .join(_b(ep_all), "name", "left_anti")
         .unionByName(unres_ep)
         .join(_b(gone_ep), "name", "left_anti")
         .dropDuplicates(["name"]))
@@ -176,13 +175,12 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
              .join(_b(affected.withColumnRenamed("name", "cand")), "cand",
                    "left_semi").select("name"))
     reg_slice = registry.join(_b(affected), "name", "left_semi")
-    gainers = fuzzy_candidates_all(unresolved_global, reg_slice) \
-        .select("name")
+    gainers = fuzzy_candidates(unresolved_global, reg_slice).select("name")
     re_probe = (stale.unionByName(gainers).unionByName(unres_ep)
                 .dropDuplicates(["name"])
                 .join(unresolved_global, "name", "left_semi")
                 .localCheckpoint())
-    cand_new = fuzzy_candidates_all(re_probe, registry).localCheckpoint()
+    cand_new = fuzzy_candidates(re_probe, registry).localCheckpoint()
 
     # candidate-LIST delta: a changed list can flip a per-site winner
     # even when the global top-1 stands — those docs must re-resolve
@@ -206,13 +204,10 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
 
     # name_links upsert: batch endpoints get fresh exact+fuzzy rows;
     # other re-probed names keep their exact columns, new fuzzy winner
-    top1 = fuzzy_top1(cand_new).select("name", "c_fuzzy")
-    rows_ep = m_ep.join(top1, "name", "left")
     rows_other = (nl_old.join(_bg(re_probe), "name", "left_semi")
                   .join(_b(ep_all), "name", "left_anti")
-                  .drop("c_fuzzy").join(top1, "name", "left")
-                  .select("name", "c_alias", "c_exact", "c_fuzzy"))
-    nmap_keep = (rows_ep.unionByName(rows_other)
+                  .select("name", "c_alias", "c_exact"))
+    nmap_keep = (with_fuzzy_top1(m_ep.unionByName(rows_other), cand_new)
                  .join(_b(gone_ep), "name", "left_anti").localCheckpoint())
     # resolution delta BEFORE committing (old rows still at hand)
     nl_delta = (
@@ -249,12 +244,8 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
                .filter(F.col("name") != F.col("canonical"))
                .select("name", F.col("canonical").alias("canonical_name"),
                        F.lit("fuzzy").alias("stage")))
-    fuzzy_linked = (name_map.join(_bg(local), "name", "left_semi")
-                    .filter(F.col("c_alias").isNull()
-                            & F.col("c_exact").isNull()
-                            & F.col("c_fuzzy").isNotNull())
-                    .select("name", F.col("c_fuzzy").alias("canonical_name"),
-                            F.lit("fuzzy").alias("stage")))
+    fuzzy_linked = fuzzy_links(name_map.join(_bg(local), "name",
+                                             "left_semi"))
     # membership rows for EVERY local name (canonical_entities derives its
     # name universe from registry ∪ linked; dupes collapse there)
     plain = local.select(

@@ -33,17 +33,6 @@ def read_page_stream(spark: SparkSession, input_dir: str,
     )
 
 
-def streaming_extract(pages_stream: DataFrame,
-                      watermark: str = "1 hour") -> DataFrame:
-    """Dedup late/duplicate urls within the watermark, then extract."""
-    deduped = (
-        pages_stream
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["url"])
-    )
-    return extract_all(deduped)
-
-
 def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
                             checkpoint_dir: str, watermark: str = "1 hour"):
     """foreachBatch sink: each micro-batch is handed to the SAME batch

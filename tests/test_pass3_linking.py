@@ -126,11 +126,12 @@ def test_canonical_entities_norm_and_alias_merge(spark):
 def test_site_fuzzy_locality_flips_winner(spark):
     """VERDICT r02 #2 'done' criterion: with two equal-Jaccard candidates,
     the per-site winner flips on URL distance; disabling the tiebreak
-    (name-level fuzzy_candidates) picks the other candidate for /s3/ sites."""
+    (the name-level fuzzy_top1 of the same candidate list) picks the
+    other candidate for /s3/ sites."""
     from pyspark.sql import functions as F
 
     from gitnexus_spark.operators.linking import (fuzzy_candidates,
-                                                  fuzzy_candidates_all,
+                                                  fuzzy_top1,
                                                   site_fuzzy_map)
 
     probes = spark.createDataFrame(
@@ -143,7 +144,7 @@ def test_site_fuzzy_locality_flips_winner(spark):
          ("Zq05.Brand", "https://w.example.org/s7/a.html", 1)],
         ["name", "first_doc", "n_docs"])
 
-    cands = fuzzy_candidates_all(probes, registry, fuzzy_threshold=0.4)
+    cands = fuzzy_candidates(probes, registry, fuzzy_threshold=0.4)
     rows = {r["cand"]: r["jaccard"] for r in cands.collect()}
     assert set(rows) == {"Zq05_Brand", "Zq05.Brand"}
     assert len(set(rows.values())) == 1  # exact Jaccard tie (5/11)
@@ -156,8 +157,7 @@ def test_site_fuzzy_locality_flips_winner(spark):
 
     # tiebreak OFF (name-level): deterministic cand ASC everywhere,
     # i.e. the /s3/ answer flips
-    off = fuzzy_candidates(probes.select("name"), registry,
-                           fuzzy_threshold=0.4)
+    off = fuzzy_top1(cands)
     assert off.collect()[0]["c_fuzzy"] == "Zq05.Brand"
 
 
@@ -189,7 +189,21 @@ def test_pipeline_uses_site_fuzzy(spark, tmp_path):
         rows, "url string, html binary, text string, lang string"
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
 
-    out = KGPipeline(spark, str(tmp_path / "kg")).run(pages)
+    # every job of the run — pool-thread commits included — must carry
+    # the caller's job group
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("site-fuzzy-run", "KGPipeline.run under one job group")
+    try:
+        out = KGPipeline(spark, str(tmp_path / "kg")).run(pages)
+        stray = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert tracker.getJobIdsForGroup("site-fuzzy-run")
+    assert not stray, f"jobs outside the caller's job group: {sorted(stray)}"
+
     probes = {r["doc_url"]: (r["obj"], r["obj_stage"]) for r in
               out["triples_resolved"].filter("pred = 'endorsed'").collect()}
     # /a/ site picks MoreX (url_dist 1 vs 2); its CC component is
@@ -200,3 +214,18 @@ def test_pipeline_uses_site_fuzzy(spark, tmp_path):
     from gitnexus_spark.plans.pipeline import integrity_checks
     checks = integrity_checks(out["nodes"], out["edges"])
     assert checks == {k: 0 for k in checks}
+
+    # the driver/standalone composition (name_resolution_map) answers
+    # exactly what the pipeline committed as name_links
+    from gitnexus_spark.operators.linking import name_resolution_map
+    tri = out["triples_raw"]
+    names = tri.select(F.col("subj").alias("name")).unionByName(
+        tri.select(F.col("obj").alias("name")))
+    cols = ["name", "c_alias", "c_exact", "c_fuzzy"]
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.select(*cols).collect()),
+                      key=lambda r: r[0])
+    committed = rows(out["name_map"])
+    assert ("More", None, None, "MoreX") in committed
+    assert rows(name_resolution_map(names, out["entities"])) == committed

@@ -256,7 +256,9 @@ def test_fuzzy_winner_flips_on_locality(spark):
     """Two candidates with IDENTICAL Jaccard: the one whose first_doc is
     closer to the probing page wins (reference import-distance bonuses,
     trie.ts:182-208) — and flips when the probe moves."""
-    from gitnexus_spark.operators.linking import entity_registry, fuzzy_candidates
+    from gitnexus_spark.operators.linking import (entity_registry,
+                                                  fuzzy_candidates, fuzzy_top1,
+                                                  site_fuzzy_map)
 
     m = spark.createDataFrame(
         [("https://h.org/a/p1.html", "Acme Corp A", 0, 1),
@@ -267,13 +269,13 @@ def test_fuzzy_winner_flips_on_locality(spark):
     def winner(probe_doc):
         probes = spark.createDataFrame([("Acme Corp X", probe_doc)],
                                        ["name", "doc_url"])
-        out = fuzzy_candidates(probes, reg, locality_col="doc_url").collect()
-        return out[0]["c_fuzzy"]
+        cands = fuzzy_candidates(probes, reg)
+        return site_fuzzy_map(probes, cands).collect()[0]["c_fuzzy"]
 
     # probe in /a -> candidate defined in /a wins; probe in /b -> /b wins
     assert winner("https://h.org/a/p2.html") == "Acme Corp A"
     assert winner("https://h.org/b/p7.html") == "Acme Corp B"
     # without locality, lexicographic min (A) wins regardless
     probes = spark.createDataFrame([("Acme Corp X",)], ["name"])
-    got = fuzzy_candidates(probes, reg).collect()[0]["c_fuzzy"]
+    got = fuzzy_top1(fuzzy_candidates(probes, reg)).collect()[0]["c_fuzzy"]
     assert got == "Acme Corp A"
