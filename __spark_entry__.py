@@ -798,10 +798,10 @@ FROM w LEFT JOIN agg USING (doc_id)"""
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures themselves (hashed to one string per doc)."""
-    from gitnexus_spark.operators.dedup import minhash_signature
+    from gitnexus_spark.operators.dedup import minhash_signature_agg
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_signature(docs, num_hashes=16).select(
+    return minhash_signature_agg(docs, num_hashes=16).select(
         "doc_id",
         F.md5(F.expr("concat_ws(',', transform(sig, x -> cast(x as string)))"))
             .alias("sig_hash"),
@@ -1373,8 +1373,7 @@ FROM documents"""
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # aggregation form (r06): same values as with_fingerprint without
-    # the per-row interpreted transform/array_sort — functions/text.py
+    # bottom-k md5 sketch on the codegen gram stream — functions/text.py
     from gitnexus_spark.functions.text import fingerprint_agg
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -2557,11 +2556,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (so no query goes two rounds without a fresh external green row),
     # then (b) every entry whose implementation changed this round; the
     # remaining entries — all green in the immediately previous round and
-    # unchanged — absorb the truncation. For r7: the r6 window covered
-    # tiers 1+2 below; rotate tier 3 (r5-green, unchanged in r6) forward.
+    # unchanged — absorb the truncation. For r7: the r6 window covered the
+    # r6 tiers 1+2, so the r6 tier 3 leads, then the r7 word-gram plan
+    # changes; the r6 tiers 1+2 absorb the truncation.
     return {
-        # -- tier 1: fell outside the 50-entry r5 window (last driver rows
-        # r4 or earlier) — every one gets a fresh r6 row ------------------
+        # -- r6 tier 3: r5-green, unchanged in r6, outside the r6 window --
+        "stratified_sample": q_stratified_sample,
+        "pack_sequences": q_pack_sequences,
+        "mix_report": q_mix_report,
+        "events_cube": q_events_cube,
+        "events_rolling": q_events_rolling,
+        "events_pivot": q_events_pivot,
+        "asof_join_events": q_asof_join_events,
+        "asof_join_bucketed": q_asof_join_bucketed,
+        "heavy_hitter_words": q_heavy_hitter_words,
+        "sketch_distinct_rollup": q_sketch_distinct_rollup,
+        "sketch_overlap_langs": q_sketch_overlap_langs,
+        "sketch_quantile_rollup": q_sketch_quantile_rollup,
+        "dedup_exact": q_dedup_exact,
+        "pq_search": q_pq_search,
+        "pq_search_ranked": q_pq_search_ranked,
+        "snapshot_merge": q_snapshot_merge,
+        "kg_pass1_text": q_kg_pass1_text,
+        "kg_triples_raw": q_kg_triples_raw,
+        "kg_triples_resolved": q_kg_triples_resolved,
+        "kg_linking_stages": q_kg_linking_stages,
+        "salted_agg": q_salted_agg,
+        "kg_links": q_kg_links,
+        "kg_fuzzy_locality": q_kg_fuzzy_locality,
+        "kg_search_indexed": q_kg_search_indexed,
+        "kg_span_attribution": q_kg_span_attribution,
+        "kg_extraction_diagnostics": q_kg_extraction_diagnostics,
+        "kg_cypher_top_mentions": q_kg_cypher_top_mentions,
+        "kg_cypher_acquired": q_kg_cypher_acquired,
+        "kg_cypher_varlen": q_kg_cypher_varlen,
+        # -- implementation changed in r7 (word-gram kernel: MinHash and
+        # the Jaccard shingle set read gram_stream) -------------------------
+        "minhash_signatures": q_minhash_signatures,
+        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
+        # -- r6 tier 1: fell outside the 50-entry r5 window; every one got
+        # a fresh r6 row ---------------------------------------------------
         "kg_cypher_optional_with": q_kg_cypher_optional_with,
         "kg_cypher_shortest": q_kg_cypher_shortest,
         "archive_pages": q_archive_pages,
@@ -2582,7 +2616,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # driver-green, and stays green in the committed local record.
         "kg_entities": q_kg_entities,
         "quality_filter": q_quality_filter,
-        "minhash_signatures": q_minhash_signatures,
         "collect_agg": q_collect_agg,
         "pagination": q_pagination,
         "blended_similarity": q_blended_similarity,
@@ -2596,9 +2629,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_latest_per_user": q_events_latest_per_user,
         "events_tumbling": q_events_tumbling,
         "json_extract_events": q_json_extract_events,
-        # -- tier 2: implementation changed in r6 (codegen rewrites, star
-        # edges, SCC gate, structure-graph plan) — kept inside the window
-        # so the external gate re-verifies every changed plan ------------
+        # -- r6 tier 2: implementation changed in r6 (codegen rewrites,
+        # star edges, SCC gate, structure-graph plan), re-verified in the
+        # r6 window ---------------------------------------------------------
         "text_stats": q_text_stats,
         "repetition_stats": q_repetition_stats,
         "fingerprint": q_fingerprint,
@@ -2619,38 +2652,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_pagerank": q_kg_pagerank,
         "kg_top_entities": q_kg_top_entities,
         "kg_mentions": q_kg_mentions,
-        # -- tier 3: r5-green and unchanged in r6 — absorbs the driver-
-        # window truncation; rotate these forward in r7 ------------------
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "mix_report": q_mix_report,
-        "events_cube": q_events_cube,
-        "events_rolling": q_events_rolling,
-        "events_pivot": q_events_pivot,
-        "asof_join_events": q_asof_join_events,
-        "asof_join_bucketed": q_asof_join_bucketed,
-        "heavy_hitter_words": q_heavy_hitter_words,
-        "sketch_distinct_rollup": q_sketch_distinct_rollup,
-        "sketch_overlap_langs": q_sketch_overlap_langs,
-        "sketch_quantile_rollup": q_sketch_quantile_rollup,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "pq_search": q_pq_search,
-        "pq_search_ranked": q_pq_search_ranked,
-        "snapshot_merge": q_snapshot_merge,
-        "kg_pass1_text": q_kg_pass1_text,
-        "kg_triples_raw": q_kg_triples_raw,
-        "kg_triples_resolved": q_kg_triples_resolved,
-        "kg_linking_stages": q_kg_linking_stages,
-        "salted_agg": q_salted_agg,
-        "kg_links": q_kg_links,
-        "kg_fuzzy_locality": q_kg_fuzzy_locality,
-        "kg_search_indexed": q_kg_search_indexed,
-        "kg_span_attribution": q_kg_span_attribution,
-        "kg_extraction_diagnostics": q_kg_extraction_diagnostics,
-        "kg_cypher_top_mentions": q_kg_cypher_top_mentions,
-        "kg_cypher_acquired": q_kg_cypher_acquired,
-        "kg_cypher_varlen": q_kg_cypher_varlen,
     }
 
 

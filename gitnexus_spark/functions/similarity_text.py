@@ -18,11 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import _words
+
 W_JACCARD, W_COSINE, W_LEVENSHTEIN = 0.3, 0.4, 0.3  # semantic-similarity.ts:150
-
-
-def _words(col: str) -> str:
-    return f"split(trim(regexp_replace(lower({col}), '\\\\s+', ' ')), ' ')"
 
 
 def blended_similarity(pairs: DataFrame, a_col: str = "text_a",

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import gram_stream, split_words
+
 # tiny per-language stopword packs (rule packs = data, like the
 # tree-sitter query packs). Deliberately small + frozen: they are part of
 # the deterministic contract.
@@ -26,7 +28,7 @@ LANG_PRIORITY = ["en", "de", "es", "fr"]  # deterministic tie-break order
 
 
 def _words(text_col: str) -> str:
-    return f"split(trim(regexp_replace(lower({text_col}), '\\\\s+', ' ')), ' ')"
+    return split_words(f"lower({text_col})")
 
 
 def with_token_count(df: DataFrame, text_col: str = "text",
@@ -212,31 +214,17 @@ def text_stats_agg(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text", k: int = 8,
-                     shingle_n: int = 3, out_col: str = "fingerprint") -> DataFrame:
-    """Bottom-k sketch fingerprint: the k smallest md5(shingle) values,
-    sorted — a compact document signature whose overlap estimates Jaccard
-    (winnowing-style; ref rolling hash parsing-processor.ts:806-814)."""
-    from ..operators.dedup import with_shingles
-
-    d = with_shingles(df, text_col, shingle_n)
-    return d.withColumn(
-        out_col,
-        F.expr(f"slice(array_sort(transform(shingles, s -> md5(s))), 1, {k})"),
-    ).drop("shingles")
-
-
 def fingerprint_agg(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", k: int = 8,
                     shingle_n: int = 3,
                     out_col: str = "fingerprint") -> DataFrame:
-    """(id, fingerprint) — same values as ``with_fingerprint`` (distinct
-    shingles have distinct md5s, so collect_set over the positional gram
-    stream sorts to the same bottom-k), computed on the codegen gram
-    stream + one partial-aggregated groupBy instead of per-row
-    interpreted transform/array_sort lambdas."""
-    from ..operators.dedup import gram_stream
+    """(id, fingerprint): bottom-k sketch of each document, the ``k``
+    smallest md5 digests of its distinct word ``shingle_n``-grams, sorted
+    ascending. Two fingerprints' overlap estimates the documents' Jaccard
+    (winnowing-style; ref rolling hash parsing-processor.ts:806-814).
 
+    Built on the codegen gram stream plus one partial-aggregated groupBy;
+    positional duplicates collapse in the collect_set."""
     g = gram_stream(df.select(id_col, text_col), [id_col], text_col,
                     shingle_n)
     return (g.groupBy(id_col)

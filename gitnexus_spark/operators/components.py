@@ -69,14 +69,9 @@ def connected_components(
             e.unpersist()
 
 
-def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Classic path-compressed union-find on collected edges; component =
-    min member (same contract as the distributed path)."""
-    return _union_find_rows(edges.sparkSession,
-                            edges.select(src, dst).collect())
-
-
 def _union_find_rows(spark, rows) -> DataFrame:
+    """Classic path-compressed union-find on collected (src, dst) rows;
+    component = min member (same contract as the distributed path)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:

@@ -9,6 +9,10 @@ family.
 Implementation rules:
 - EVERYTHING here is built-in Spark SQL expressions — JVM-side,
   whole-stage-codegen'd, zero Python in the hot path.
+- Word n-grams have one builder, ``gram_stream`` (one row per gram
+  position, tokenized by ``split_words``); MinHash,
+  decontamination, n-gram Jaccard and the bottom-k fingerprint all read
+  it. ``shingles_sql`` is the same gram set in DuckDB for the oracle.
 - All hashing is md5-based so results are exactly reproducible in the
   DuckDB oracle (and across Spark versions) — no JVM-specific
   xxhash64/murmur in user-visible output.
@@ -40,48 +44,29 @@ from pyspark.sql import functions as F
 # shingling
 # --------------------------------------------------------------------------
 
-def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-                  out_col: str = "shingles") -> DataFrame:
-    """Word n-gram shingle set (distinct, order-normalized whitespace).
-
-    The word array is materialized as a column FIRST: referencing the
-    split(...) expression inside the position lambda would re-tokenize the
-    whole document once per shingle position (O(words^2) regexp work per
-    doc — ruinous on long web pages); an attribute reference is evaluated
-    once per row.
-    """
-    words = f"split(trim(regexp_replace({text_col}, '\\\\s+', ' ')), ' ')"
-    expr = (
-        f"array_distinct(transform(sequence(1, greatest(size(_sh_words) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(_sh_words, i, {n}))))"
-    )
-    return (df.withColumn("_sh_words", F.expr(words))
-            .withColumn(out_col, F.expr(expr))
-            .drop("_sh_words"))
+def split_words(col: str) -> str:
+    """SQL word array of ``col``: whitespace runs collapsed, ends trimmed
+    (``['']`` for empty text). The package's one word tokenizer."""
+    return f"split(trim(regexp_replace({col}, '\\\\s+', ' ')), ' ')"
 
 
 def gram_stream(df: DataFrame, id_cols: list[str], text_col: str = "text",
                 n: int = 3, out_col: str = "gram") -> DataFrame:
-    """One row per shingle POSITION (duplicates retained): the fully
-    whole-stage-codegen form of ``explode(with_shingles(...))``.
+    """Word ``n``-grams of ``text_col``: (id_cols..., out_col), one row
+    per gram POSITION, duplicates retained. Words come from
+    ``split_words`` (case kept); a text shorter than ``n`` words is one
+    gram, and empty text is the gram '' (every document has a row).
 
-    with_shingles builds the shingle array through interpreted
-    higher-order lambdas (transform + slice per position), and the
-    optimizer additionally re-evaluates that whole expression inside the
-    ``size(...) > 0`` filter it infers under the Generate — every row
-    pays the interpreted construction twice. Exploding a cheap position
-    sequence and building each gram with codegen'd slice/concat_ws
-    removes both costs (guide §4.1: built-ins over interpreted lambdas).
-
-    Consumers that need per-doc DISTINCT grams aggregate with
-    count_distinct / min (identical results: duplicates don't change a
-    distinct count or a min).
+    Whole-stage codegen: explode a position sequence and build each gram
+    with slice/concat_ws, no interpreted per-row lambda (guide §4.1).
+    Consumers needing per-doc DISTINCT grams dedup or aggregate
+    (count_distinct / min / collect_set).
     """
     from ..plans.hints import spread_small_input
 
-    words = f"split(trim(regexp_replace({text_col}, '\\\\s+', ' ')), ' ')"
     return (
-        spread_small_input(df).withColumn("_gs_w", F.expr(words))
+        spread_small_input(df)
+        .withColumn("_gs_w", F.expr(split_words(text_col)))
         .select(*id_cols, "_gs_w",
                 F.explode_outer(F.expr(
                     f"sequence(1, greatest(size(_gs_w) - {n - 1}, 1))"
@@ -92,7 +77,7 @@ def gram_stream(df: DataFrame, id_cols: list[str], text_col: str = "text",
     )
 
 
-# sql fragment for the DuckDB oracle (same shingle set)
+# sql fragment for the DuckDB oracle: the distinct gram set of gram_stream
 def shingles_sql(text_col: str = "text", n: int = 3) -> str:
     words = f"string_split(trim(regexp_replace({text_col}, '\\s+', ' ', 'g')), ' ')"
     return (
@@ -131,38 +116,19 @@ def _minhash_consts(num_hashes: int) -> list[tuple[int, int]]:
              (40503 * (i + 7) + 1) % MINHASH_P) for i in range(num_hashes)]
 
 
-def minhash_signature(df: DataFrame, text_col: str = "text",
-                      num_hashes: int = 16, shingle_n: int = 3,
-                      out_col: str = "sig") -> DataFrame:
-    """num_hashes-element MinHash signature (array<bigint>).
-
-    Hash family: ONE md5 per shingle folded to a 60-bit int, then
-    num_hashes cheap affine mixes h_i(x) = (a_i*x + b_i) mod (2^31-1) —
-    O(S) digest work instead of O(S * H), same uniformity. Deterministic
-    and oracle-reproducible; computed entirely scan-local (no shuffle).
-    """
-    d = with_shingles(df, text_col, shingle_n)
-    base = ("pmod(cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint), "
-            f"{MINHASH_P})")
-    d = d.withColumn("_bases", F.expr(f"transform(shingles, s -> {base})"))
-    mins = ", ".join(
-        f"array_min(transform(_bases, x -> pmod({a} * x + {b}, {MINHASH_P})))"
-        for a, b in _minhash_consts(num_hashes)
-    )
-    return d.withColumn(out_col, F.expr(f"array({mins})")) \
-            .drop("shingles", "_bases")
-
-
 def minhash_signature_agg(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", num_hashes: int = 16,
                           shingle_n: int = 3,
                           out_col: str = "sig") -> DataFrame:
-    """(id_col, sig) — same values as ``minhash_signature`` (min over
-    duplicate gram occurrences == min over the distinct shingle set),
-    computed on the codegen gram stream + ONE partial-aggregated groupBy
-    instead of per-row interpreted transform/array_min lambdas. The
-    map-side partial aggregation reduces the exchange to one row per
-    (task, id): the shuffle carries num_hashes longs per doc, not grams.
+    """(id_col, sig): ``num_hashes``-element MinHash signature
+    (array<bigint>) of each document's distinct word ``shingle_n``-grams.
+
+    Hash family: ONE md5 per gram folded to a 60-bit int, then num_hashes
+    affine mixes h_i(x) = (a_i*x + b_i) mod (2^31-1); sig[i] = min h_i
+    over the grams (a min ignores duplicate positions). O(S) digest work
+    instead of O(S * H); reproduced by ``minhash_sig_sql``. Computed on
+    the codegen gram stream + ONE partial-aggregated groupBy: the
+    exchange carries num_hashes longs per (task, doc), not grams.
     """
     g = gram_stream(df.select(id_col, text_col), [id_col], text_col,
                     shingle_n)
@@ -426,12 +392,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     no shingle is hot; the previous mixed-universe version underestimated
     pairs that shared hot shingles).
     """
-    sh = with_shingles(df.select(id_col, text_col), text_col, shingle_n) \
-        .select(F.col(id_col).alias("id"), "shingles")
-    # the exploded posting list feeds FOUR consumers (hot-shingle census,
-    # per-doc sizes, and both sides of the pair join) — pin it once so the
-    # shingling scan runs once, not four times.
-    ex = sh.select("id", F.explode("shingles").alias("sh")).persist()
+    # distinct (doc, shingle) posting list; it feeds FOUR consumers
+    # (hot-shingle census, per-doc sizes, and both sides of the pair
+    # join) — pin it once so the shingling scan runs once, not four times.
+    ex = (gram_stream(df.select(id_col, text_col), [id_col], text_col,
+                      shingle_n, "sh")
+          .select(F.col(id_col).alias("id"), "sh")
+          .dropDuplicates(["id", "sh"])
+          .persist())
     if cache_handles is not None:
         cache_handles.append(ex)
     hot = ex.groupBy("sh").count().filter(F.col("count") > max_shingle_df)
@@ -461,39 +429,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 SIMHASH_BITS = 32
 
 
-def simhash(df: DataFrame, text_col: str = "text",
-            out_col: str = "simhash", bits: int = SIMHASH_BITS) -> DataFrame:
-    """bits-wide SimHash fingerprint as an int array of 0/1.
-
-    Per-token bit_k = parity of the k-th hex digit of md5(token); the
-    fingerprint bit is the sign of the sum of (2*bit-1) over tokens.
-    Pure SQL expressions -> oracle-reproducible; scan-local, no shuffle.
-
-    The bit-sum accumulator is a single aggregate pass with an
-    array-of-counters accumulator (zip_with per token), NOT one
-    aggregate per bit: higher-order functions are interpreted per
-    element, so `bits` separate traversals of the token array cost
-    ~2.7x more wall than one traversal doing the same arithmetic
-    (measured at sf0.1; results bit-identical).
-    """
-    assert bits <= 32
-    words = f"split(trim(regexp_replace({text_col}, '\\\\s+', ' ')), ' ')"
-    # one md5 per word (not per word x bit): hash first, then read each of
-    # the `bits` hex digits off the cached digests.
-    hashes = f"transform({words}, w -> md5(w))"
-    expr = (
-        f"transform(aggregate(_word_hashes, array_repeat(0, {bits}), "
-        f"(acc, h) -> zip_with(acc, sequence(1, {bits}), (a, k) -> a + "
-        f"if(instr('13579bdf', substring(h, k, 1)) > 0, 1, -1))), "
-        f"s -> if(s > 0, 1, 0))"
-    )
-    return (
-        df.withColumn("_word_hashes", F.expr(hashes))
-        .withColumn(out_col, F.expr(expr))
-        .drop("_word_hashes")
-    )
-
-
 def _md5_digit_bit(k: int) -> str:
     """Codegen expression for the PARITY of the k-th (1-based) hex digit
     of an md5 whose digits are pre-folded into three longs _sm1 (digits
@@ -510,8 +445,15 @@ def _md5_digit_bit(k: int) -> str:
 def simhash_agg(df: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text", out_col: str = "simhash",
                 bits: int = SIMHASH_BITS) -> DataFrame:
-    """(id_col, simhash) — same values as ``simhash`` (bit-identical; see
-    tests), computed codegen-only and token-deduplicated:
+    """(id_col, simhash): ``bits``-wide SimHash fingerprint of each
+    document as an int array of 0/1.
+
+    Tokens come from ``split_words`` (case kept). Per token, bit_k is the
+    parity of the k-th hex digit of md5(token); the fingerprint bit is 1
+    when the sum of (2*bit_k - 1) over token OCCURRENCES is positive.
+    Reproduced by the ``dedup_simhash`` oracle SQL.
+
+    Computed codegen-only and token-deduplicated:
 
     1. explode tokens, pre-aggregate (id, token) -> occurrence count
        (one partial-agg'd shuffle; Zipf token repetition means far fewer
@@ -522,16 +464,15 @@ def simhash_agg(df: DataFrame, id_col: str = "doc_id",
     3. one groupBy(id) summing cnt * (2*digit_parity - 1) per bit, all
        shiftright/and codegen.
 
-    The HOF form pays ~bits interpreted lambda evaluations per token
-    OCCURRENCE (substring + instr each); measured at sf1.0 this form is
-    ~5x faster end to end.
+    Measured at sf1.0, this is ~5x faster end to end than a per-row
+    interpreted form paying ~bits lambda evaluations per token occurrence.
     """
     from ..plans.hints import spread_small_input
 
     assert bits <= 32
-    words = f"split(trim(regexp_replace({text_col}, '\\\\s+', ' ')), ' ')"
     toks = spread_small_input(df.select(id_col, text_col)) \
-        .select(id_col, F.explode_outer(F.expr(words)).alias("_sh_tok"))
+        .select(id_col,
+                F.explode_outer(F.expr(split_words(text_col))).alias("_sh_tok"))
     g0 = toks.groupBy(id_col, "_sh_tok").agg(F.count("*").alias("_sh_cnt"))
     m = g0.select(
         id_col, "_sh_cnt",
@@ -553,18 +494,12 @@ def simhash_agg(df: DataFrame, id_col: str = "doc_id",
                               for k in range(bits)]).alias(out_col)))
 
 
-def simhash_hex(df: DataFrame, text_col: str = "text",
-                out_col: str = "simhash_hex", bits: int = SIMHASH_BITS,
-                id_col: str | None = None) -> DataFrame:
-    """SimHash rendered as a bit string (join/debug-friendly).
-
-    With ``id_col`` the codegen aggregation path is used and the result
-    is (id_col, out_col) only; without it the row-preserving HOF path.
-    """
-    if id_col is not None:
-        d = simhash_agg(df, id_col, text_col, "_sh_bits", bits)
-    else:
-        d = simhash(df, text_col, "_sh_bits", bits)
+def simhash_hex(df: DataFrame, id_col: str, text_col: str = "text",
+                out_col: str = "simhash_hex",
+                bits: int = SIMHASH_BITS) -> DataFrame:
+    """(id_col, out_col): ``simhash_agg`` rendered as a '0'/'1' bit
+    string (join/debug-friendly)."""
+    d = simhash_agg(df, id_col, text_col, "_sh_bits", bits)
     return d.withColumn(out_col, F.expr("concat_ws('', _sh_bits)")).drop("_sh_bits")
 
 

@@ -36,22 +36,25 @@ def test_minhash_lsh_finds_near_dup(docs):
 
 
 def test_minhash_deterministic(docs):
-    from gitnexus_spark.operators.dedup import minhash_signature
+    from gitnexus_spark.operators.dedup import minhash_signature_agg
 
-    a = minhash_signature(docs, num_hashes=8).select("doc_id", "sig").collect()
-    b = minhash_signature(docs, num_hashes=8).select("doc_id", "sig").collect()
+    a = minhash_signature_agg(docs, num_hashes=8).select("doc_id", "sig").collect()
+    b = minhash_signature_agg(docs, num_hashes=8).select("doc_id", "sig").collect()
     assert sorted(map(str, a)) == sorted(map(str, b))
 
 
 def test_jaccard_exact_value(docs, spark):
-    from gitnexus_spark.operators.dedup import ngram_jaccard_pairs, with_shingles
+    from gitnexus_spark.operators.dedup import ngram_jaccard_pairs
 
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in ngram_jaccard_pairs(docs, threshold=0.1).collect()}
     assert pairs[(1, 2)] == 1.0
-    # verify (1,3) against a locally computed jaccard
-    sh = {r["doc_id"]: set(r["shingles"])
-          for r in with_shingles(docs).select("doc_id", "shingles").collect()}
+    # verify (1,3) against a jaccard over pure-Python word 3-gram sets
+    def shingles(text, n=3):
+        w = text.split()
+        return {" ".join(w[i:i + n]) for i in range(max(len(w) - n + 1, 1))}
+
+    sh = {r["doc_id"]: shingles(r["text"]) for r in docs.collect()}
     expected = len(sh[1] & sh[3]) / len(sh[1] | sh[3])
     assert abs(pairs[(1, 3)] - expected) < 1e-6
 
@@ -59,7 +62,8 @@ def test_jaccard_exact_value(docs, spark):
 def test_simhash_identical_and_near(docs):
     from gitnexus_spark.operators.dedup import simhash_hex, simhash_pairs
 
-    hx = {r["doc_id"]: r["simhash_hex"] for r in simhash_hex(docs).collect()}
+    hx = {r["doc_id"]: r["simhash_hex"]
+          for r in simhash_hex(docs, id_col="doc_id").collect()}
     assert hx[1] == hx[2]
     assert len(hx[1]) == 32
     # true hamming(1,3) from the fingerprints themselves
@@ -72,10 +76,10 @@ def test_simhash_identical_and_near(docs):
 
 def test_simhash_band_pigeonhole(docs):
     """max_hamming < bands guarantees no false negatives vs brute force."""
-    from gitnexus_spark.operators.dedup import simhash, simhash_pairs
+    from gitnexus_spark.operators.dedup import simhash_agg, simhash_pairs
 
     d = {r["doc_id"]: r["sh"] for r in
-         simhash(docs, out_col="sh").select("doc_id", F.col("sh")).collect()}
+         simhash_agg(docs, out_col="sh").select("doc_id", F.col("sh")).collect()}
     brute = set()
     ids = sorted(d)
     for i in ids:

@@ -3,9 +3,13 @@
 Every rewrite of this round replaced an interpreted higher-order-function
 plan with a codegen explode/aggregate plan (or clique pairs with
 connectivity-equivalent star edges). These tests pin the contract the
-oracle can only spot-check: the optimized form must be BIT-IDENTICAL to
-the row-preserving original on adversarial inputs (empty text, repeated
-tokens, CJK, stopword-only, single-word, whitespace runs).
+oracle can only spot-check at scale: on adversarial inputs (empty text,
+repeated tokens, CJK, stopword-only, single-word, whitespace runs) the
+codegen form must be BIT-IDENTICAL to an independent reference — the
+DuckDB oracle SQL for the word-gram kernel (SimHash, MinHash, distinct
+grams, decontamination, fingerprint, n-gram Jaccard), and the
+row-preserving original where one is still a public API (text stats,
+quality) or a clique-pair rebuild (near-dup clusters).
 """
 
 from __future__ import annotations
@@ -36,63 +40,93 @@ def adv_docs(spark):
     return spark.createDataFrame(ADVERSARIAL, ["doc_id", "text", "source"])
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def _rows(rows):
+    """Sorted row tuples (array values as tuples) of a DataFrame or of
+    fetched DuckDB rows, so both engines compare by value."""
+    if hasattr(rows, "collect"):
+        rows = rows.collect()
+    return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                  for r in rows)
+
+
+def _oracle(sql):
+    """Rows of DuckDB ``sql`` with ADVERSARIAL registered as
+    ``documents``, the table the driver's oracle SQL reads."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    try:
+        con.register("documents", pd.DataFrame(
+            ADVERSARIAL, columns=["doc_id", "text", "source"]))
+        return _rows(con.execute(sql).fetchall())
+    finally:
+        con.close()
 
 
 def test_simhash_agg_matches_hof(adv_docs):
-    from gitnexus_spark.operators.dedup import simhash, simhash_agg
+    """Reference: the ``dedup_simhash`` oracle SQL (32-bit strings)."""
+    from __spark_entry__ import SQL_DEDUP_SIMHASH
+    from gitnexus_spark.operators.dedup import simhash_agg
 
-    old = simhash(adv_docs.select("doc_id", "text")).select(
-        "doc_id", F.expr("concat_ws('', simhash)").alias("h"))
     new = simhash_agg(adv_docs).select(
         "doc_id", F.expr("concat_ws('', simhash)").alias("h"))
-    assert _rows(old) == _rows(new)
+    assert _oracle(SQL_DEDUP_SIMHASH) == _rows(new)
 
 
 def test_minhash_signature_agg_matches_hof(adv_docs):
-    from gitnexus_spark.operators.dedup import (minhash_signature,
-                                                minhash_signature_agg)
+    """Reference: the oracle's shingle, base-hash and signature
+    fragments (full 16-long signatures, not their md5)."""
+    from gitnexus_spark.operators.dedup import (minhash_bases_sql,
+                                                minhash_sig_sql,
+                                                minhash_signature_agg,
+                                                shingles_sql)
 
-    old = minhash_signature(adv_docs.select("doc_id", "text")).select(
-        "doc_id", F.expr("cast(sig as string)").alias("s"))
-    new = minhash_signature_agg(adv_docs).select(
-        "doc_id", F.expr("cast(sig as string)").alias("s"))
-    assert _rows(old) == _rows(new)
+    old = _oracle(f"""WITH sh AS (
+  SELECT doc_id, {shingles_sql()} AS shingles FROM documents),
+bases AS (SELECT doc_id, {minhash_bases_sql()} AS b FROM sh)
+SELECT doc_id, {minhash_sig_sql('b', 16)} AS sig FROM bases""")
+    new = minhash_signature_agg(adv_docs)
+    assert old == _rows(new)
+
+
+def _oracle_grams(n, where="true"):
+    """(doc_id, gram) rows of the oracle's distinct shingle set."""
+    from gitnexus_spark.operators.dedup import shingles_sql
+
+    return (f"SELECT DISTINCT doc_id, unnest({shingles_sql(n=n)}) AS gram "
+            f"FROM documents WHERE {where}")
 
 
 def test_gram_stream_distinct_matches_shingles(adv_docs):
-    from gitnexus_spark.operators.dedup import gram_stream, with_shingles
+    from gitnexus_spark.operators.dedup import gram_stream
 
     for n in (2, 4):
-        old = (with_shingles(adv_docs.select("doc_id", "text"), n=n)
-               .select("doc_id", F.explode("shingles").alias("g")).distinct())
+        old = _oracle(_oracle_grams(n))
         new = gram_stream(adv_docs.select("doc_id", "text"), ["doc_id"],
                           n=n).distinct()
-        assert _rows(old) == _rows(new), f"n={n}"
+        assert old == _rows(new), f"n={n}"
 
 
 def test_decontaminate_count_distinct_matches_prededup(adv_docs):
     """The stream form retains positional duplicates and restores
-    distinctness via count_distinct; must equal the array_distinct
-    pre-dedup form."""
-    from gitnexus_spark.operators.dedup import decontaminate, with_shingles
+    distinctness via count_distinct; must equal the oracle's
+    list_distinct shingle-set join."""
+    from gitnexus_spark.operators.dedup import decontaminate
 
     train = adv_docs.filter(F.col("doc_id") % 3 != 0)
     ev = adv_docs.filter(F.col("doc_id") % 3 == 0)
-    ev_old = (with_shingles(ev.select("text"), n=2)
-              .select(F.explode("shingles").alias("gram")).distinct())
-    tr_old = (with_shingles(train.select("doc_id", "text"), n=2)
-              .select("doc_id", F.explode("shingles").alias("gram")))
-    hits = (tr_old.join(F.broadcast(ev_old), "gram")
-            .groupBy("doc_id").agg(F.count("*").alias("eval_hits")))
-    old = (train.select("doc_id").join(hits, "doc_id", "left")
-           .select("doc_id",
-                   F.coalesce("eval_hits", F.lit(0)).alias("eval_hits"),
-                   (F.coalesce("eval_hits", F.lit(0)) >= 1).cast("int")
-                   .alias("contaminated")))
+    old = _oracle(f"""WITH ev AS (
+  SELECT DISTINCT gram FROM ({_oracle_grams(2, "doc_id % 3 = 0")})),
+tr AS ({_oracle_grams(2, "doc_id % 3 <> 0")}),
+hits AS (SELECT doc_id, count(*) AS eval_hits FROM tr JOIN ev USING (gram)
+         GROUP BY doc_id)
+SELECT d.doc_id, COALESCE(h.eval_hits, 0) AS eval_hits,
+       CASE WHEN COALESCE(h.eval_hits, 0) >= 1 THEN 1 ELSE 0 END AS contaminated
+FROM (SELECT doc_id FROM documents WHERE doc_id % 3 <> 0) d
+LEFT JOIN hits h USING (doc_id)""")
     new = decontaminate(train, ev, shingle_n=2, min_hits=1)
-    assert _rows(old) == _rows(new)
+    assert old == _rows(new)
 
 
 def test_text_stats_agg_matches_with_chain(adv_docs):
@@ -117,14 +151,24 @@ def test_quality_agg_matches_with_quality_score(adv_docs):
 
 
 def test_fingerprint_agg_matches_with_fingerprint(adv_docs):
-    from gitnexus_spark.functions.text import (fingerprint_agg,
-                                               with_fingerprint)
+    """Reference: the ``fingerprint`` oracle SQL (md5 of the bottom-8)."""
+    from __spark_entry__ import SQL_FINGERPRINT
+    from gitnexus_spark.functions.text import fingerprint_agg
 
-    old = with_fingerprint(adv_docs).select(
-        "doc_id", F.expr("cast(fingerprint as string)").alias("fp"))
     new = fingerprint_agg(adv_docs).select(
-        "doc_id", F.expr("cast(fingerprint as string)").alias("fp"))
-    assert _rows(old) == _rows(new)
+        "doc_id", F.md5(F.concat_ws(",", "fingerprint")).alias("fp_hash"))
+    assert _oracle(SQL_FINGERPRINT) == _rows(new)
+
+
+def test_ngram_jaccard_pairs_matches_oracle(adv_docs):
+    """The driver's ``dedup_jaccard_pairs`` call against its oracle SQL."""
+    from __spark_entry__ import SQL_DEDUP_JACCARD
+    from gitnexus_spark.operators.dedup import ngram_jaccard_pairs
+
+    new = ngram_jaccard_pairs(adv_docs, threshold=0.03, shingle_n=2)
+    got = _rows(new)
+    assert got, "fixture must yield pairs (identical and empty texts)"
+    assert _oracle(SQL_DEDUP_JACCARD) == got
 
 
 def test_near_dup_star_edges_match_clique_pairs(spark):

@@ -161,7 +161,7 @@ def test_large_small_star_chain_olog_rounds(spark):
     """A 1000-chain has diameter 1000: min-label propagation needs ~1000
     rounds; large-star/small-star must converge in O(log n) with results
     identical to union-find."""
-    from gitnexus_spark.operators.components import (_driver_union_find,
+    from gitnexus_spark.operators.components import (_union_find_rows,
                                                      connected_components)
 
     n = 1000
@@ -174,7 +174,7 @@ def test_large_small_star_chain_olog_rounds(spark):
     assert all(got[f"c{i:04d}"] == "c0000" for i in range(n))
     assert got["x1"] == got["x2"] == "x1"
     uf = {r["vertex"]: r["component"]
-          for r in _driver_union_find(edges, "src", "dst").collect()}
+          for r in _union_find_rows(spark, edges.collect()).collect()}
     assert got == uf
 
 

@@ -55,13 +55,13 @@ def test_boilerplate_flag(spark):
 
 
 def test_fingerprint_stable_and_discriminative(spark):
-    from gitnexus_spark.functions.text import with_fingerprint
+    from gitnexus_spark.functions.text import fingerprint_agg
 
     df = spark.createDataFrame(
         [(1, "a b c d e f g h i j k l"), (2, "a b c d e f g h i j k l"),
          (3, "totally different words here now")],
         ["doc_id", "text"])
-    got = {r["doc_id"]: tuple(r["fingerprint"]) for r in with_fingerprint(df).collect()}
+    got = {r["doc_id"]: tuple(r["fingerprint"]) for r in fingerprint_agg(df).collect()}
     assert got[1] == got[2]
     assert got[1] != got[3]
     assert len(got[1]) <= 8

@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for declared queries to plans/r06/.
+"""Dump .explain("formatted") for declared queries to plans/r07/.
 
 Usage: python tools/dump_plans.py <before|after> [query ...]
 Defaults to the bench heads. Explain only — nothing is executed.
@@ -32,7 +32,7 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or BENCH_HEADS
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r06")
+        os.path.abspath(__file__))), "plans", "r07")
     os.makedirs(out_dir, exist_ok=True)
 
     from gitnexus_spark.session import get_spark
