@@ -1493,9 +1493,10 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pq_search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-checked PQ retrieval (VERDICT r04 #7): ADC floats can't
-    hash-match SQL, but the RANKING can — the re-rank stage scores with
-    ROUND(cosine, 6) and _topk_merge tie-breaks (score DESC, vec_id ASC),
-    so (q_id, rank, vec_id) is deterministic. The oracle is exact
+    hash-match SQL, but the RANKING can — the re-rank stage scores the
+    shortlist with the bit-exact cosine fold rounded HALF_UP to 6 dp and
+    ranks it in the similarity top-k kernel (score DESC, vec_id ASC), so
+    (q_id, rank, vec_id) is deterministic. The oracle is exact
     re-ranked cosine top-k in SQL; a 250-of-500 shortlist makes ADC
     shortlist recall exact at oracle scale (recall at production knobs
     is gated separately in tests/test_pq.py)."""

@@ -14,9 +14,11 @@ Spark shape (everything distributed, nothing driver-bound):
   the task closure — k*d doubles, kilobytes), then ONE shuffle keyed
   (subspace, cell, dim) for partial-aggregated centroid means;
 - ENCODING is one scan-local Arrow pass emitting the m-byte code array;
-- SCORING broadcasts the per-query LUTs (m x k floats per query) and
-  gathers per-row, then reuses the bounded per-partition top-k merge —
-  the first exchange carries <= partitions x queries x k rows.
+- SEARCH runs the similarity top-k kernel (similarity._topk): the
+  per-query ADC lookup tables ride the task closure and ONE Arrow pass
+  over the codes scores, rounds and keeps <= queries x k rows per
+  partition, so the only exchange carries <= partitions x queries x k
+  rows; the exact re-rank runs the same kernel over the shortlist rows.
 
 Codebooks are deterministic: seeded from the md5-fold sample (the
 dedup/IVF family fold), refined by means — reproducible across runs up
@@ -28,10 +30,13 @@ arithmetic; correctness is recall- and distortion-gated in pytest
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gitnexus_spark.operators.sampling import fold_expr
+from gitnexus_spark.operators.similarity import (_fold_cosine_matrix,
+                                                 _rows_matrix, _topk)
 
 
 def _subspace_slices(d: int, m: int) -> list:
@@ -61,8 +66,6 @@ def train_pq_codebooks(corpus: DataFrame, m: int = 8, k: int = 256,
     plus one (subspace, cell, dim)-keyed shuffle whose map-side combine
     reduces to m*k*d/m rows before the exchange.
     """
-    import numpy as np
-
     n = corpus.count()
     if n == 0:
         raise ValueError("train_pq_codebooks: corpus is empty")
@@ -76,13 +79,11 @@ def train_pq_codebooks(corpus: DataFrame, m: int = 8, k: int = 256,
         df = corpus.select(id_col, vec_col).withColumn(
             "_fold", fold_expr(id_col))
         seed_rows = df.orderBy("_fold", id_col).limit(k).collect()
-    first = np.asarray(seed_rows[0][vec_col], dtype=np.float64)
-    d = first.shape[0]
-    slices = _subspace_slices(d, m)
+    seed_vecs = _rows_matrix([r[vec_col] for r in seed_rows])
+    slices = _subspace_slices(seed_vecs.shape[1], m)
     books = []
     for lo, hi in slices:
-        seeds = np.array([np.asarray(r[vec_col], dtype=np.float64)[lo:hi]
-                          for r in seed_rows])
+        seeds = seed_vecs[:, lo:hi]
         if len(seeds) < k:  # tiny corpora: pad by cycling the seeds
             reps = -(-k // len(seeds))
             seeds = np.tile(seeds, (reps, 1))[:k]
@@ -112,7 +113,6 @@ def _assign_codes(df: DataFrame, books: list, slices: list,
     explode=True -> one row per (vector, subspace) carrying the subvector
     (training); explode=False -> one row per vector with the full m-code
     array (encoding)."""
-    import numpy as np
     import pandas as pd
 
     from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
@@ -134,8 +134,7 @@ def _assign_codes(df: DataFrame, books: list, slices: list,
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
+            V = _rows_matrix(pdf[vec_col])
             codes = np.empty((len(V), len(slices)), dtype=np.int32)
             for s, (lo, hi) in enumerate(slices):
                 sub = V[:, lo:hi]
@@ -165,8 +164,6 @@ def encode_pq(corpus: DataFrame, codebooks: list,
     """(id, codes) — the m-byte representation, one scan-local pass.
     This is the table that gets written at rest instead of the floats:
     m ints (cast to BYTE/SHORT by the writer for k<=256) vs 4*d bytes."""
-    import numpy as np
-
     books = [np.asarray(b, dtype=np.float64) for _, b in codebooks]
     d = sum(len(b[0]) for _, b in codebooks)
     slices = _subspace_slices(d, len(books))
@@ -178,69 +175,31 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list,
             k: int = 10,
             id_col: str = "vec_id",
             q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
-    """ADC top-k over PQ codes: per query, a m x k_codes lookup table of
-    subspace dot contributions (query_subvec . centroid) is precomputed;
-    a row's approximate dot product is m gathers + a sum — no float
-    vectors touched. LUTs for ALL queries ride the task closure
-    (#queries x m x k_codes doubles — queries are small by contract);
-    scoring is scan-local and feeds the bounded per-partition top-k
-    merge, so the only exchange carries <= partitions x queries x k
-    rows. Scores are approximate dot products (normalize embeddings
-    upstream for cosine semantics); ties break on vec_id ASC like the
-    exact path."""
-    import numpy as np
-    import pandas as pd
+    """ADC top-k over PQ codes: (q_id, vec_id, score, rank).
 
-    from gitnexus_spark.operators.similarity import _topk_merge
-
+    Per query, a m x k_codes lookup table of subspace dot contributions
+    (query_subvec . centroid) is built once on the driver; the tables of
+    ALL queries ride the task closure (#queries x m x k_codes doubles —
+    queries are small by contract). A row's approximate dot product is m
+    gathers + a sum, computed inside the top-k kernel's one pass over the
+    codes — no float vector touched, and the rows x queries product never
+    leaves Python. Every pair is eligible. Scores are approximate dot
+    products rounded to 6 dp (normalize embeddings upstream for cosine
+    semantics); ties break on vec_id ASC like the exact path."""
     books = [np.asarray(b, dtype=np.float64) for _, b in codebooks]
-    d = sum(b.shape[1] for b in books)
-    slices = _subspace_slices(d, len(books))
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    q_ids = [r[q_id_col] for r in q_rows]
-    if not q_rows:  # np.stack([]) raises; empty in -> empty out
-        from pyspark.sql.types import DoubleType, StructField, StructType
-        qid_type = queries.select(q_id_col).schema[0].dataType
-        empty = StructType([StructField(q_id_col, qid_type),
-                            codes.select(id_col).schema[0],
-                            StructField("score", DoubleType())])
-        from gitnexus_spark.operators.similarity import _topk_merge
-        return _topk_merge(
-            codes.sparkSession.createDataFrame([], empty), k,
-            q_id_col, id_col)
-    luts = []
-    for r in q_rows:
-        qv = np.asarray(r[q_vec_col], dtype=np.float64)
-        luts.append(np.stack([books[s] @ qv[lo:hi]
-                              for s, (lo, hi) in enumerate(slices)]))
-    L = np.stack(luts)  # (n_q, m, k_codes)
+    slices = _subspace_slices(sum(b.shape[1] for b in books), len(books))
+    sub = np.arange(len(books))
 
-    src = codes.select(id_col, "codes")
-    id_field = src.schema[id_col]
-    from pyspark.sql.types import DoubleType, StructField, StructType
-    qid_type = queries.select(q_id_col).schema[0].dataType
-    schema = StructType([StructField(q_id_col, qid_type), id_field,
-                         StructField("score", DoubleType())])
-    m = len(books)
+    def plan(q_ids, Q):
+        lut = np.array([[b @ q[lo:hi] for b, (lo, hi) in zip(books, slices)]
+                        for q in Q])  # (n_q, m, k_codes)
 
-    def run(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
+        def batch(pdf):
             C = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            rows = np.arange(m)[None, :]
-            frames = []
-            for qi, qid in enumerate(q_ids):
-                s = L[qi][rows, C].sum(axis=1)
-                frames.append(pd.DataFrame({
-                    q_id_col: qid,
-                    id_col: pdf[id_col].values,
-                    "score": np.round(s, 6),
-                }))
-            yield pd.concat(frames, ignore_index=True)
+            return np.column_stack([t[sub, C].sum(axis=1) for t in lut]), None
+        return codes.select(id_col, "codes"), batch
 
-    scored = src.mapInPandas(run, schema=schema)
-    return _topk_merge(scored, k, q_id_col, id_col)
+    return _topk(queries, k, id_col, q_id_col, q_vec_col, plan)
 
 
 def pq_topk_rerank(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
@@ -252,18 +211,19 @@ def pq_topk_rerank(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
     builds a per-query shortlist (cheap, code-only scan), then ONLY the
     shortlist rows are re-scored with exact cosine against the float
     vectors. The float table is touched for #queries x shortlist rows —
-    fetched via a broadcast semi-join on id, so at 10^12 vectors the
-    exact math runs on thousands of rows, not the corpus. End-to-end
-    recall equals shortlist recall, which m/k knobs tune independently
-    of the final k."""
-    from gitnexus_spark.operators.similarity import _topk_merge, cosine_expr
-
+    corpus ⋈ broadcast(shortlist) on id, each row eligible only for its
+    own q_id, scored in the top-k kernel with the same bit-exact fold
+    and rounding as brute_force_topk. End-to-end recall equals shortlist
+    recall, which m/k knobs tune independently of the final k."""
     short = pq_topk(codes, queries, codebooks, k=shortlist,
                     id_col=id_col, q_id_col=q_id_col, q_vec_col=q_vec_col)
-    cand = corpus.select(id_col, vec_col).join(
-        F.broadcast(short.select(q_id_col, id_col)), id_col)
-    scored = cand.join(
-        F.broadcast(queries.select(q_id_col, q_vec_col)), q_id_col) \
-        .withColumn("score", F.round(cosine_expr(vec_col, q_vec_col), 6))
-    return _topk_merge(scored.select(q_id_col, id_col, "score"),
-                       k, q_id_col, id_col)
+
+    def plan(q_ids, Q):
+        cand = corpus.select(id_col, vec_col).join(
+            F.broadcast(short.select(q_id_col, id_col)), id_col)
+        own = np.asarray(q_ids)
+        return cand, lambda pdf: (
+            _fold_cosine_matrix(_rows_matrix(pdf[vec_col]), Q),
+            pdf[q_id_col].to_numpy()[:, None] == own[None, :])
+
+    return _topk(queries, k, id_col, q_id_col, q_vec_col, plan)

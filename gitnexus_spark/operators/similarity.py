@@ -1,47 +1,40 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: exact brute-force cosine top-k (small query set x large corpus
-— the corpus side stays distributed; queries broadcast).
-Scale path: IVF-flat — deterministic leader-based cells; queries probe
-the nearest `n_probe` cells only, cutting the scanned fraction to
-~n_probe/n_cells while keeping recall high.
+Search paths: exact brute-force cosine top-k, IVF-flat ANN
+(deterministic stratified leaders ~sqrt(n) cells, multi-probe), the
+same IVF read AT REST (cell-partitioned layout, probes prune to their
+directories), and, in operators/pq.py, PQ ADC search with an exact
+re-rank. Every one of them runs the same top-k kernel (_topk): the
+query set (small by contract) is collected once, ONE Arrow pass over
+the source scores each batch against it and keeps ≤ #queries x k rows
+per partition under the final comparator (rounded score DESC, id ASC),
+and one merge (_merge_local) over ≤ #partitions x #queries x k rows
+ranks them. A path differs only in its source frame, its per-batch
+score matrix and which (row, query) pairs are eligible. No path windows
+over the corpus x queries product or sends it through an exchange.
 
-Arithmetic is explicit left-to-right double folds (F.aggregate over
-zip_with) so the DuckDB oracle (same fold in list_sum/list_transform)
-reproduces values bit-for-bit; user-facing scores round to 6 dp.
+Arithmetic is bit-exact with the DuckDB oracles: cosines are
+left-to-right float64 folds vectorized across pairs
+(_fold_cosine_matrix — the IEEE operation order of the SQL
+list_sum/list_transform fold) and user-facing scores round with the
+HALF_UP twin of Spark's round(x, 6) (_round6_spark). IVF cell
+assignment and probing share one sorted leader matrix and one stable
+argsort (_sorted_leaders, _nearest_cells), with the leader matrix in
+the task closure — no explode, crossJoin, window or shuffle.
 Related reference math: TF-IDF cosine in semantic-similarity.ts:23-59
 (driver-side JS there; distributed + vectorized here).
-
-Scale shape (VERDICT r01 what's-wrong #4 fixed):
-- top-k never routes the full corpus x queries product through a
-  Window.partitionBy(q_id) (that funnels everything into #queries
-  reducers). Instead: per-input-partition local top-k via map-side
-  partial aggregation on (q_id, partition_id), then a final merge over
-  #queries x #partitions candidate rows — bounded, tiny.
-- IVF cell assignment is scan-local: the leader set is collected once
-  (n_cells rows) and shipped in the task closure of ONE Arrow-batched
-  pass (_assign_cells) whose vectorized fold is bit-exact with the SQL
-  cosine — no explode, no crossJoin, no window, no shuffle, and no
-  n_cells-term in the expression tree (a literal-array argmax was fine
-  at 16 cells but interpreted-fold-per-leader-per-row at sqrt(n)).
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DOT = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, v) -> acc + v)"
-NORM = "sqrt(aggregate({a}, cast(0 as double), (acc, v) -> acc + cast(v as double) * cast(v as double)))"
-
-
-def cosine_expr(a: str, b: str) -> F.Column:
-    return F.expr(
-        f"({DOT.format(a=a, b=b)}) / (({NORM.format(a=a)}) * ({NORM.format(a=b)}))"
-    )
-
-
-from decimal import ROUND_HALF_UP, Decimal
+from gitnexus_spark.operators.sampling import FOLD_MAX, fold_expr
+from gitnexus_spark.plans.hints import spread_small_input
 
 _Q6 = Decimal("0.000001")
 
@@ -56,136 +49,105 @@ def _round6_spark(x: float) -> float:
     return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP)) + 0.0
 
 
-def _brute_score_topk(corpus: DataFrame, query_rows: list, k: int,
-                      id_col: str, vec_col: str, q_id_col: str,
-                      q_id_type) -> DataFrame:
-    """Fused scoring + per-partition top-k for the brute-force path: ONE
-    Arrow pass over (id, vec) computes the cosine matrix against the
-    broadcast query matrix with the bit-exact sequential fold
-    (_fold_cosine_matrix), rounds with the parity-tested HALF_UP twin of
-    F.round, and keeps ≤ #queries x k rows per partition under the final
-    comparator (rounded score DESC, id ASC).
+def _rows_matrix(vecs) -> np.ndarray:
+    """(n, d) float64 matrix of array-column values; (0, 0) when empty."""
+    m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+    return m if len(m) else np.zeros((0, 0))
 
-    Replaces crossJoin + interpreted aggregate/zip_with cosine +
-    row-stream top-k: the JVM->Python boundary now carries each corpus
-    row once instead of once per query, and no interpreted lambda runs
-    per (row, query) pair (guide §4.1/§4.2). Exact: rounding is monotone
-    and ties are totally ordered by id, so per-batch pruning keeps every
-    row that can reach the global top-k (boundary ties included).
-    """
-    import math
 
-    import numpy as np
+def _fold_cosine_matrix(V: np.ndarray, L: np.ndarray) -> np.ndarray:
+    """Cosine of every (row, leader) pair with LEFT-TO-RIGHT sequential
+    folds in float64 — the exact IEEE operation sequence of the SQL
+    cosine (acc = acc + x*y, element by element), vectorized ACROSS
+    pairs instead of along the vector axis. Bit-identical to the DuckDB
+    oracle's fold by construction; ~d numpy ops per batch."""
+    n, d = V.shape
+    dot = np.zeros((n, L.shape[0]))
+    nv = np.zeros(n)
+    nl = np.zeros(L.shape[0])
+    for j in range(d):
+        vj, lj = V[:, j], L[:, j]
+        dot += vj[:, None] * lj[None, :]
+        nv += vj * vj
+        nl += lj * lj
+    return dot / (np.sqrt(nv)[:, None] * np.sqrt(nl)[None, :])
+
+
+def _topk(queries: DataFrame, k: int, id_col: str, q_id_col: str,
+          q_vec_col: str, plan) -> DataFrame:
+    """The top-k kernel of every search path: (q_id, id, score, rank).
+
+    Collects the query set once — q_ids and the (n_q, d) float64 matrix
+    Q — and asks the caller's ``plan(q_ids, Q)`` for the source frame
+    and a per-batch rule ``pdf -> (S, eligible)``: S is the (n, n_q)
+    score matrix of the batch's rows against the queries, eligible an
+    (n, n_q) bool mask of the pairs that may rank (None: every pair).
+
+    ONE Arrow pass over the source drops NaN scores (a cosine against a
+    zero-norm vector is undefined, never a candidate), rounds with the
+    HALF_UP twin of F.round and keeps per query a candidate set
+    compacted at 4k under the final comparator (rounded score DESC, id
+    ASC). That is exact: rounding is monotone and ties are totally
+    ordered by id, so no row that can reach the global top-k is pruned.
+    A set, because a source may hold one (query, id) pair twice (the
+    at-rest IVF layout stores a 2-way-assigned vector under two cells,
+    which one task can read together); a repeat must not take a second
+    of the k slots. Each partition emits ≤ #queries x k rows and
+    _merge_local ranks them. An empty query set runs no pass and
+    returns 0 rows of the same schema."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from ..plans.hints import spread_small_input
-
-    rows = sorted(query_rows, key=lambda r: r[0])
+    rows = queries.select(q_id_col, q_vec_col).collect()
     q_ids = [r[0] for r in rows]
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-
-    src = spread_small_input(corpus.select(id_col, vec_col))
-    id_field = src.schema[id_col]
-    schema = StructType([StructField(q_id_col, q_id_type),
-                         id_field,
-                         StructField("score", DoubleType())])
+    src, batch = plan(q_ids, _rows_matrix([r[1] for r in rows]))
+    schema = StructType([
+        StructField(q_id_col, queries.schema[q_id_col].dataType),
+        src.schema[id_col],
+        StructField("score", DoubleType())])
 
     def run(it):
-        best: dict = {}  # q -> list[(neg_rounded, id)]
+        best: dict = {}  # q_id -> {(-rounded score, id)}
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            S = _fold_cosine_matrix(V, Q, np)
-            ids = list(pdf[id_col])
+            S, eligible = batch(pdf)
+            ok = ~np.isnan(S)
+            if eligible is not None:
+                ok &= eligible
+            ids = pdf[id_col].tolist()
             for qi, q in enumerate(q_ids):
-                col = S[:, qi]
-                lst = best.setdefault(q, [])
-                for i, s in enumerate(col):
-                    if math.isnan(s):
-                        continue
-                    lst.append((-_round6_spark(float(s)), ids[i]))
-                if len(lst) >= 4 * k:  # exact compaction: the trim
-                    lst.sort()         # comparator IS the final one
-                    del lst[k:]
-        out = []
-        for q, lst in best.items():
-            lst.sort()
-            for neg, i in lst[:k]:
-                out.append((q, i, -neg + 0.0))
+                idx = np.flatnonzero(ok[:, qi])
+                if 0 < k < len(idx):
+                    # round6 moves a score by < 1e-6, so a row 1e-5 under
+                    # the batch's k-th best raw score rounds strictly
+                    # below k others: skip it before the Decimal round
+                    s = S[idx, qi]
+                    idx = idx[s >= np.partition(s, -k)[-k] - 1e-5]
+                cands = best.setdefault(q, set())
+                cands.update((-_round6_spark(float(S[i, qi])), ids[i])
+                             for i in idx)
+                if len(cands) >= 4 * k:
+                    best[q] = set(sorted(cands)[:k])
+        out = [(q, i, -neg + 0.0) for q, cands in best.items()
+               for neg, i in sorted(cands)[:k]]
         yield pd.DataFrame(out, columns=[q_id_col, id_col, "score"])
 
-    return src.mapInPandas(run, schema=schema)
-
-
-def _partition_topk(scored: DataFrame, k: int,
-                    q_id_col: str, id_col: str) -> DataFrame:
-    """Phase 1 of distributed top-k: bounded per-partition selection
-    BEFORE any exchange (VERDICT r02 #4 — the previous
-    groupBy(q_id, partition_id) + slice(sort(collect_list)) applied the
-    slice only AFTER aggregation, so the partial->final exchange still
-    shipped the complete scored product once).
-
-    One Arrow-batched pass per input partition keeps a per-query
-    candidate list compacted to k, and emits ≤ #queries x k rows per
-    partition — the exchange that follows carries at most
-    #partitions x #queries x k rows regardless of corpus size.
-    Ordering contract matches the merge: score DESC, id ASC; null/NaN
-    scores are dropped (a cosine against a zero-norm vector is
-    undefined, never a top-k candidate).
-    """
-    import math
-
-    import pandas as pd
-
-    src = scored.select(q_id_col, id_col, "score")
-    schema = src.schema
-
-    def run(it):
-        best: dict = {}  # q_id -> list[(neg_score, id)]
-        for pdf in it:
-            for q, i, s in zip(pdf[q_id_col], pdf[id_col], pdf["score"]):
-                if s is None or (isinstance(s, float) and math.isnan(s)):
-                    continue
-                lst = best.setdefault(q, [])
-                lst.append((-float(s), i))
-                if len(lst) >= 4 * k:  # amortized O(n log k) compaction
-                    lst.sort()
-                    del lst[k:]
-        out = []
-        for q, lst in best.items():
-            lst.sort()
-            for neg, i in lst[:k]:
-                out.append((q, i, -neg))
-        yield pd.DataFrame(out, columns=[q_id_col, id_col, "score"])
-
-    return src.mapInPandas(run, schema=schema)
-
-
-def _topk_merge(scored: DataFrame, k: int, q_id_col: str, id_col: str) -> DataFrame:
-    """Distributed top-k per query WITHOUT a hot-key window and WITHOUT
-    shuffling the scored product: per-partition bounded heap (phase 1,
-    _partition_topk), then one merge over the ≤ #partitions x #queries x k
-    survivors. Candidates carry (neg_score, id, score) structs: sorting
-    ascending on (neg, id) == (score DESC, id ASC), and the emitted score
-    is the ORIGINAL double (no double-negation, which would flip the sign
-    bit of -0.0).
-    """
-    local = _partition_topk(scored, k, q_id_col, id_col)
+    local = (src.mapInPandas(run, schema=schema) if q_ids
+             else src.sparkSession.createDataFrame([], schema))
     return _merge_local(local, k, q_id_col, id_col)
 
 
 def _merge_local(local: DataFrame, k: int, q_id_col: str,
                  id_col: str) -> DataFrame:
-    """Final merge over the ≤ #partitions x #queries x k phase-1
-    survivors (shared by the expression path and the fused Arrow
-    scorers). array_distinct before the slice: candidates for the same
-    (query, id) pair are EXACT struct duplicates when they occur at all
-    (deterministic rounded score) — the at-rest IVF layout stores a
-    2-way-assigned vector as two rows in different cell partitions, so
-    its phase-1 survivors can repeat; everywhere else this is a no-op."""
+    """The one top-k merge: over the ≤ #partitions x #queries x k kernel
+    survivors, per query, sort (-score, id, score) structs ascending —
+    score DESC, id ASC, emitting the ORIGINAL double (no double
+    negation, which would flip the sign bit of -0.0) — and rank.
+    array_distinct before the slice: the same (query, id) pair can
+    survive in two partitions (the at-rest IVF layout's 2-way-assigned
+    vectors) and is then an EXACT struct duplicate (deterministic
+    rounded score); everywhere else this is a no-op."""
     item = F.struct(
         (-F.col("score")).alias("neg"),
         F.col(id_col).alias("id"),
@@ -211,18 +173,18 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
     """Exact top-k by cosine: (q_id, vec_id, score, rank).
 
-    queries is expected to be small -> broadcast nested-loop join; the
-    corpus scan is the only pass over big data, and the reduction is the
-    two-phase local-top-k merge (scales with #partitions, not corpus
-    size). Ties break on vec_id ASC (total order, deterministic under
-    any parallelism).
+    The query set is small by contract and rides the task closure; the
+    corpus is scanned once, each row crossing the JVM->Python boundary
+    once (not once per query), and every (row, query) pair is eligible.
+    Ties break on vec_id ASC (total order, deterministic under any
+    parallelism).
     """
-    q_rows = [(r[0], r[1]) for r in
-              queries.select(q_id_col, q_vec_col).collect()]
-    q_id_type = queries.schema[q_id_col].dataType
-    local = _brute_score_topk(corpus, q_rows, k, id_col, vec_col,
-                              q_id_col, q_id_type)
-    return _merge_local(local, k, q_id_col, id_col)
+    def plan(q_ids, Q):
+        def batch(pdf):
+            return _fold_cosine_matrix(_rows_matrix(pdf[vec_col]), Q), None
+        return spread_small_input(corpus.select(id_col, vec_col)), batch
+
+    return _topk(queries, k, id_col, q_id_col, q_vec_col, plan)
 
 
 def default_n_cells(n: int) -> int:
@@ -258,12 +220,7 @@ def leader_order_expr(id_col: str) -> F.Column:
     DuckDB oracle reproduces it: ('0x' || substring(md5(id::VARCHAR),
     1, 15))::BIGINT. The expression itself is the shared family fold
     (sampling.fold_expr) — one definition, every consumer."""
-    from gitnexus_spark.operators.sampling import fold_expr
-
     return fold_expr(id_col)
-
-
-from gitnexus_spark.operators.sampling import FOLD_MAX  # noqa: E402  (canonical home)
 
 
 def select_leaders(corpus: DataFrame, n_cells: int,
@@ -310,223 +267,55 @@ def select_leaders(corpus: DataFrame, n_cells: int,
     return vecs.join(F.broadcast(winners), "cell_id")
 
 
-def _fold_cosine_matrix(V, L, np):
-    """Cosine of every (row, leader) pair with LEFT-TO-RIGHT sequential
-    folds in float64 — the exact IEEE operation sequence of the SQL
-    DOT/NORM expressions (acc = acc + x*y, element by element), vectorized
-    ACROSS pairs instead of along the vector axis. Bit-identical to the
-    expression path / DuckDB oracle by construction; ~d numpy ops per
-    batch instead of n_cells interpreted higher-order folds per row."""
-    n, d = V.shape
-    dot = np.zeros((n, L.shape[0]))
-    nv = np.zeros(n)
-    nl = np.zeros(L.shape[0])
-    for j in range(d):
-        vj, lj = V[:, j], L[:, j]
-        dot += vj[:, None] * lj[None, :]
-        nv += vj * vj
-        nl += lj * lj
-    return dot / (np.sqrt(nv)[:, None] * np.sqrt(nl)[None, :])
+def _sorted_leaders(leader_rows: list) -> tuple[list, np.ndarray]:
+    """(cell_ids, L): the leaders sorted by cell_id ASC and their
+    (n_cells, d) matrix — sorted so that a STABLE argsort on negated
+    cosines (_nearest_cells) yields exactly the oracle's
+    ORDER BY cs DESC, cell_id ASC."""
+    rows = sorted(((r[0], r[1]) for r in leader_rows), key=lambda r: r[0])
+    return [c for c, _ in rows], _rows_matrix([v for _, v in rows])
+
+
+def _nearest_cells(V: np.ndarray, L: np.ndarray, n: int) -> np.ndarray:
+    """(rows, ≤ n) positions into the sorted leaders of each row's n
+    argmax-cosine leaders — ties cell_id ASC, NaN last (Spark double
+    ordering). The one cell rule of assignment, probing and the IVF
+    eligibility test."""
+    return np.argsort(-_fold_cosine_matrix(V, L), axis=1, kind="stable")[:, :n]
+
+
+def _probe_mask(Q: np.ndarray, L: np.ndarray, n_probe: int) -> np.ndarray:
+    """(n_cells, n_q) bool: leader position c is one of query q's n_probe
+    nearest cells. Driver-side — the query set is small by contract."""
+    mask = np.zeros((len(L), len(Q)), dtype=bool)
+    mask[_nearest_cells(Q, L, n_probe), np.arange(len(Q))[:, None]] = True
+    return mask
 
 
 def _assign_cells(df: DataFrame, leader_rows: list, n_top: int,
                   id_col: str, vec_col: str) -> DataFrame:
     """Scan-local cell assignment: each row gets its n_top argmax-cosine
-    leaders (ties: cell_id ASC; NaN scores sort last — Spark double
-    ordering). One Arrow-batched pass, zero shuffles; the leader matrix
-    rides the task closure (n_cells x d doubles — 32 MB at the sqrt(n)
-    rule for a 10^9-row corpus; beyond that, shard the coarse quantizer
-    hierarchically). Replaces the literal-array expression (VERDICT r02:
-    fine at 16 cells, interpreted-fold-per-leader-per-row at sqrt(n))."""
-    import numpy as np
-    import pandas as pd
+    leaders (_nearest_cells). One Arrow-batched pass, zero shuffles; the
+    leader matrix rides the task closure (n_cells x d doubles — 32 MB at
+    the sqrt(n) rule for a 10^9-row corpus; beyond that, shard the
+    coarse quantizer hierarchically)."""
+    from pyspark.sql.types import StructField, StructType
 
-    # leaders pre-sorted by cell_id ASC -> a STABLE argsort on the neg
-    # scores yields exactly array_sort(struct(neg, cell_id)) order
-    rows = sorted([(r[0], r[1]) for r in leader_rows], key=lambda r: r[0])
-    cell_ids = [r[0] for r in rows]
-    L = np.array([r[1] for r in rows], dtype=np.float64)
-    n_top_eff = min(n_top, len(rows))
-
-    from ..plans.hints import spread_small_input
-
+    cell_ids, L = _sorted_leaders(leader_rows)
+    cell_ids = np.asarray(cell_ids)
     src = spread_small_input(df.select(id_col, vec_col))
     id_field = src.schema[id_col]
-    vec_field = src.schema[vec_col]
-    from pyspark.sql.types import StructField, StructType
-    schema = StructType([id_field, vec_field,
+    schema = StructType([id_field, src.schema[vec_col],
                          StructField("cell_id", id_field.dataType)])
 
     def run(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            neg = -_fold_cosine_matrix(V, L, np)
-            top = np.argsort(neg, axis=1, kind="stable")[:, :n_top_eff]
-            out = pdf.loc[pdf.index.repeat(n_top_eff)].reset_index(drop=True)
-            out["cell_id"] = pd.Series(
-                [cell_ids[c] for r in top for c in r])
+            top = _nearest_cells(_rows_matrix(pdf[vec_col]), L, n_top)
+            out = pdf.loc[pdf.index.repeat(top.shape[1])].reset_index(drop=True)
+            out["cell_id"] = cell_ids[top.ravel()]
             yield out
-    return src.mapInPandas(run, schema=schema)
-
-
-def _probe_cells_local(query_rows: list, leader_rows: list,
-                       n_probe: int) -> list:
-    """Driver-side twin of _assign_cells for the small-by-contract query
-    set: same sorted-leader matrix, same bit-exact fold, same stable
-    argsort on negated scores (ties cell_id ASC, NaN last). Returns
-    [(q_id, [cell_id, ...])] in input order — no distributed pass, no
-    broadcast build job for a handful of query rows."""
-    import numpy as np
-
-    rows = sorted([(r[0], r[1]) for r in leader_rows], key=lambda r: r[0])
-    cell_ids = [r[0] for r in rows]
-    L = np.array([r[1] for r in rows], dtype=np.float64)
-    n_eff = min(n_probe, len(rows))
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in query_rows])
-    neg = -_fold_cosine_matrix(Q, L, np)
-    top = np.argsort(neg, axis=1, kind="stable")[:, :n_eff]
-    return [(query_rows[i][0], [cell_ids[c] for c in top[i]])
-            for i in range(len(query_rows))]
-
-
-def _ivf_fused_topk(corpus: DataFrame, leader_rows: list, query_rows: list,
-                    probe_sets: list, n_assign: int, k: int,
-                    id_col: str, vec_col: str, q_id_col: str,
-                    q_id_type) -> DataFrame:
-    """ONE Arrow pass fusing cell assignment, probe gating, bit-exact
-    scoring and per-partition top-k (guide §4.1/§4.2): for each corpus
-    row, compute its n_assign argmax cells (same stable-argsort rule as
-    _assign_cells), take the union of queries probing those cells, and
-    score each such (row, query) pair ONCE with the sequential-fold
-    cosine + HALF_UP round twin. A pair survives iff the row's assigned
-    cells intersect the query's probe cells — exactly the membership the
-    old assigned ⋈ broadcast(probes) join computed — and since each
-    corpus row lives in one partition and is scored once per query, the
-    2-way-assignment dedup exchange disappears with no replacement.
-    Emits ≤ #partitions x #queries x k rows; the query set is
-    small-by-contract (it already rides the task closure)."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..plans.hints import spread_small_input
-
-    lrows = sorted([(r[0], r[1]) for r in leader_rows], key=lambda r: r[0])
-    cell_ids = [r[0] for r in lrows]
-    L = np.array([r[1] for r in lrows], dtype=np.float64)
-    n_assign_eff = min(n_assign, len(lrows))
-
-    qrows = sorted(query_rows, key=lambda r: r[0])
-    q_ids = [r[0] for r in qrows]
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    q_index = {q: i for i, q in enumerate(q_ids)}
-    cell_to_q: dict = {}
-    for q_id, cells in probe_sets:
-        for c in cells:
-            cell_to_q.setdefault(c, []).append(q_index[q_id])
-    cell_pos_to_q = [cell_to_q.get(c, ()) for c in cell_ids]
-
-    src = spread_small_input(corpus.select(id_col, vec_col))
-    id_field = src.schema[id_col]
-    schema = StructType([StructField(q_id_col, q_id_type),
-                         id_field,
-                         StructField("score", DoubleType())])
-
-    def run(it):
-        best: dict = {}  # q_id -> list[(neg_rounded, id)]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            negL = -_fold_cosine_matrix(V, L, np)
-            top = np.argsort(negL, axis=1, kind="stable")[:, :n_assign_eff]
-            S = _fold_cosine_matrix(V, Q, np)
-            ids = list(pdf[id_col])
-            for i, rid in enumerate(ids):
-                hit: set = set()
-                for c in top[i]:
-                    hit.update(cell_pos_to_q[c])
-                for qi in hit:
-                    s = S[i, qi]
-                    if math.isnan(s):
-                        continue
-                    lst = best.setdefault(q_ids[qi], [])
-                    lst.append((-_round6_spark(float(s)), rid))
-                    if len(lst) >= 4 * k:  # exact compaction: the trim
-                        lst.sort()         # comparator IS the final one
-                        del lst[k:]
-        out = []
-        for q, lst in best.items():
-            lst.sort()
-            for neg, i in lst[:k]:
-                out.append((q, i, -neg + 0.0))
-        yield pd.DataFrame(out, columns=[q_id_col, id_col, "score"])
-
-    return src.mapInPandas(run, schema=schema)
-
-
-def _ivf_score_assigned(assigned: DataFrame, query_rows: list,
-                        probe_sets: list, k: int, id_col: str,
-                        vec_col: str, q_id_col: str, q_id_type) -> DataFrame:
-    """Arrow scorer for an AT-REST (cell_id, id, vec) scan already pruned
-    to the probe cells: each row is scored against the queries probing
-    its stored cell_id (bit-exact fold + HALF_UP round, per-partition
-    top-k under the final comparator). No broadcast join, no interpreted
-    per-candidate lambda, no dedup exchange."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    qrows = sorted(query_rows, key=lambda r: r[0])
-    q_ids = [r[0] for r in qrows]
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    q_index = {q: i for i, q in enumerate(q_ids)}
-    cell_to_q: dict = {}
-    for q_id, cells in probe_sets:
-        for c in cells:
-            cell_to_q.setdefault(c, []).append(q_index[q_id])
-
-    src = assigned.select("cell_id", id_col, vec_col)
-    id_field = src.schema[id_col]
-    schema = StructType([StructField(q_id_col, q_id_type),
-                         id_field,
-                         StructField("score", DoubleType())])
-
-    def run(it):
-        best: dict = {}  # q_id -> list[(neg_rounded, id)]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            S = _fold_cosine_matrix(V, Q, np)
-            ids = list(pdf[id_col])
-            cells = list(pdf["cell_id"])
-            for i, rid in enumerate(ids):
-                for qi in cell_to_q.get(cells[i], ()):
-                    s = S[i, qi]
-                    if math.isnan(s):
-                        continue
-                    lst = best.setdefault(q_ids[qi], [])
-                    lst.append((-_round6_spark(float(s)), rid))
-                    if len(lst) >= 4 * k:
-                        lst.sort()
-                        del lst[k:]
-        out = []
-        for q, lst in best.items():
-            lst.sort()
-            for neg, i in lst[:k]:
-                out.append((q, i, -neg + 0.0))
-        yield pd.DataFrame(out, columns=[q_id_col, id_col, "score"])
-
     return src.mapInPandas(run, schema=schema)
 
 
@@ -632,12 +421,15 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """ANN top-k: probe the n_probe nearest cells per query, exact search
     within. Defaults scale with the data: n_cells ~ sqrt(n), n_probe ~
     2*sqrt(n_cells), 2-way corpus assignment (boundary-recall insurance
-    for sample-based leaders). The probe set (#queries x n_probe rows)
-    broadcasts onto the assigned corpus — no shuffle of corpus rows; at
-    rest the assigned table is written bucketed/partitioned by cell_id so
-    a probe touches only matching buckets (partition pruning).
-    Multi-assignment can surface the same (query, vector) pair via two
-    cells — deduped before scoring.
+    for sample-based leaders).
+
+    Each query's probe cells are computed on the driver. Then ONE fused
+    Arrow pass over the corpus computes every row's n_assign nearest
+    cells and its cosine to every query; a (row, query) pair is eligible
+    iff those cells meet the query's probe cells — the membership of
+    assigned ⋈ probes in the oracle. Each row is scored once per query,
+    so 2-way assignment never yields a duplicate and no corpus row is
+    shuffled. The index at rest is write_ivf_index / ivf_topk_at_rest.
 
     leader_rows: precomputed [(cell_id, vec)] — e.g. Lloyd-trained
     centroids from train_leaders — skips leader selection entirely."""
@@ -653,22 +445,18 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     if leader_rows is None:
         leader_rows = select_leaders(corpus, n_cells, id_col, vec_col,
                                      n_rows=n_rows).collect()
-    # fully fused probe/score/top-k (guide §4.1/§4.2): the query probe
-    # cells are computed driver-side (_probe_cells_local — the query set
-    # is small by contract), then ONE Arrow corpus pass assigns cells,
-    # gates on the probe map and scores each surviving (row, query) pair
-    # once with the bit-exact fold + HALF_UP round twin. Replaces the
-    # separate assignment scan, probe broadcast build, interpreted
-    # aggregate/zip_with cosine per candidate, and the 2-way-assignment
-    # dedup exchange (each row is scored once per query here).
-    q_rows = [(r[0], r[1]) for r in
-              queries.select(q_id_col, q_vec_col).collect()]
-    q_id_type = queries.schema[q_id_col].dataType
-    probe_sets = _probe_cells_local(q_rows, leader_rows, n_probe)
-    local = _ivf_fused_topk(corpus, leader_rows, q_rows, probe_sets,
-                            n_assign, k, id_col, vec_col, q_id_col,
-                            q_id_type)
-    return _merge_local(local, k, q_id_col, id_col)
+    _, L = _sorted_leaders(leader_rows)
+
+    def plan(q_ids, Q):
+        probe = _probe_mask(Q, L, n_probe)
+
+        def batch(pdf):
+            V = _rows_matrix(pdf[vec_col])
+            return (_fold_cosine_matrix(V, Q),
+                    probe[_nearest_cells(V, L, n_assign)].any(axis=1))
+        return spread_small_input(corpus.select(id_col, vec_col)), batch
+
+    return _topk(queries, k, id_col, q_id_col, q_vec_col, plan)
 
 
 def write_ivf_index(corpus: DataFrame, path: str,
@@ -695,35 +483,34 @@ def ivf_topk_at_rest(spark, path: str, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      q_id_col: str = "q_id",
                      q_vec_col: str = "q_vec") -> DataFrame:
-    """ANN top-k against a write_ivf_index layout. The probe cell set is
-    collected (bounded: #queries x n_probe ids — queries are small by
-    contract) and pushed as a STATIC partition filter `cell_id IN (...)`,
-    so the scan prunes to the probed directories before any join —
-    dynamic partition pruning needn't fire. Verified by the
-    PartitionFilters plan test in tests/test_similarity.py."""
+    """ANN top-k against a write_ivf_index layout. The probe cells are
+    computed on the driver (bounded: #queries x n_probe ids — queries
+    are small by contract) and pushed as a STATIC partition filter
+    `cell_id IN (...)`, so the scan prunes to the probed directories —
+    dynamic partition pruning needn't fire (PartitionFilters plan test
+    in tests/test_similarity.py). A row is eligible for the queries
+    probing its STORED cell_id; a 2-way-assigned vector stored under two
+    probed cells yields exact duplicate candidates, which the kernel's
+    candidate set and _merge_local's array_distinct remove."""
     import os
 
     leader_rows = spark.read.parquet(os.path.join(path, "leaders")).collect()
     if n_probe is None:
         n_probe = default_n_probe(len(leader_rows))
-    # probe cells computed driver-side (query set small by contract),
-    # pushed as the static partition filter, then ONE Arrow pass over
-    # the pruned scan scores each row against the queries probing its
-    # STORED cell (same bit-exact fold/round as ivf_topk) with
-    # per-partition top-k. A 2-way-assigned vector stored under two
-    # probed cells yields exact duplicate candidates in different
-    # partitions — removed by _merge_local's array_distinct, which is
-    # what the old dropDuplicates exchange did.
-    q_rows = [(r[0], r[1]) for r in
-              queries.select(q_id_col, q_vec_col).collect()]
-    q_id_type = queries.schema[q_id_col].dataType
-    probe_sets = _probe_cells_local(q_rows, leader_rows, n_probe)
-    probe_cells = sorted({c for _, cells in probe_sets for c in cells})
-    assigned = spark.read.parquet(os.path.join(path, "assigned")) \
-        .filter(F.col("cell_id").isin(probe_cells))
-    local = _ivf_score_assigned(assigned, q_rows, probe_sets, k,
-                                id_col, vec_col, q_id_col, q_id_type)
-    return _merge_local(local, k, q_id_col, id_col)
+    cell_ids, L = _sorted_leaders(leader_rows)
+    pos = {c: i for i, c in enumerate(cell_ids)}
+
+    def plan(q_ids, Q):
+        probe = _probe_mask(Q, L, n_probe)
+        cells = [c for c, hit in zip(cell_ids, probe.any(axis=1)) if hit]
+        src = spark.read.parquet(os.path.join(path, "assigned")) \
+            .filter(F.col("cell_id").isin(cells)) \
+            .select("cell_id", id_col, vec_col)
+        return src, lambda pdf: (
+            _fold_cosine_matrix(_rows_matrix(pdf[vec_col]), Q),
+            probe[pdf["cell_id"].map(pos).to_numpy()])
+
+    return _topk(queries, k, id_col, q_id_col, q_vec_col, plan)
 
 
 def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.95,
@@ -739,7 +526,6 @@ def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.95,
     """
     import math
 
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -769,15 +555,14 @@ def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.95,
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "score": []})
         ids = list(pdf[id_col])
-        V = np.array([np.asarray(v, dtype=np.float64)
-                      for v in pdf[vec_col]])
+        V = _rows_matrix(pdf[vec_col])
         out_a: list = []
         out_b: list = []
         out_s: list = []
         for i0 in range(0, n, BLOCK):
             Vi = V[i0:i0 + BLOCK]
             for j0 in range(i0, n, BLOCK):
-                S = _fold_cosine_matrix(Vi, V[j0:j0 + BLOCK], np)
+                S = _fold_cosine_matrix(Vi, V[j0:j0 + BLOCK])
                 with np.errstate(invalid="ignore"):
                     mask = S >= guard          # False where NaN
                 if j0 == i0:                   # strict upper triangle
