@@ -4,10 +4,10 @@ Every construct lowers to declarative DataFrame ops, so the full
 Catalyst stack applies: node-label predicates and property maps reach
 the parquet scan as pushed filters, the per-hop joins participate in
 broadcast / AQE planning, and RETURN aggregation is an ordinary partial
-agg. The only driver-side iteration is the bounded loop that expands a
-variable-length relationship ``*m..n`` (Catalyst has no recursion) —
-the same level-synchronous shape as operators/graph_queries.var_length_paths,
-one join per level with node-distinct cycle pruning.
+agg. The only driver-side iteration expands a variable-length
+relationship ``*m..n`` or a shortestPath (Catalyst has no recursion): both
+call the traversal kernel operators/graph_queries._levels, the one level
+loop behind k_hop, paths_between and var_length_paths too.
 
 Semantics notes (the deterministic closure of the reference's engine,
 src/core/graph/query.ts:97-197):
@@ -32,9 +32,11 @@ src/core/graph/query.ts:97-197):
   grouping as RETURN, and a WHERE after WITH filters the projected
   frame (Cypher's HAVING).
 - ``p = shortestPath((a)-[:T*1..n]->(b))`` yields ONE row per reachable
-  (a, b) pair at the minimum hop count (``length(p)``); node lists are
-  not exposed — operators/graph_queries.paths_between is the analogue
-  that materializes the hops (reference query.ts:154).
+  (a, b) pair at the minimum hop count (``length(p)``), found by the
+  kernel's distance mode (a BFS frontier deduped per (a, node), so a
+  level holds at most |a|·|V| rows); node lists are not exposed —
+  operators/graph_queries.paths_between is the analogue that
+  materializes the hops (reference query.ts:154).
 """
 
 from __future__ import annotations
@@ -44,12 +46,11 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import graph_queries as gq
 from .ast import (BoolOp, Cmp, ExistsPat, InList, IsNull, Lit, MatchClause,
                   NodePat, Not, PathLen, Pattern, Prop, Query, RelPat,
                   ReturnItem, StrPred, UnwindClause, VarRef, WithClause)
 from .parser import parse
-
-MAX_VARLEN_HOPS = 5   # reference clamp, query-optimization.ts:412-422
 
 
 class CypherCompileError(ValueError):
@@ -84,94 +85,39 @@ class _PatternBuilder:
         return df.select(*[F.col(c).alias(_ncol(var, c)) for c in self.node_cols])
 
     def edge_frame(self, rel: RelPat) -> DataFrame:
-        e = self.edges
-        if rel.rtype is not None:
-            e = e.filter(F.col("type") == rel.rtype)
-        if rel.direction == "out":
-            sel = [F.col("src").alias("_from"), F.col("dst").alias("_to")]
-        else:
-            sel = [F.col("dst").alias("_from"), F.col("src").alias("_to")]
-        if rel.var is not None:
-            sel.append(F.col("type").alias(_ncol(rel.var, "type")))
-        return e.select(*sel)
+        e = gq._adjacency(self.edges, rel.rtype and [rel.rtype], rel.direction,
+                          "type")
+        if rel.var is None:
+            return e.drop("type")
+        return e.withColumnRenamed("type", _ncol(rel.var, "type"))
 
-    def _expand_levels(self, rel: RelPat,
-                       seed: DataFrame | None = None) -> dict[int, DataFrame]:
-        """Level-synchronous node-distinct path expansion: {length:
-        paths} for lengths 1..min(max_hops, cap). Bounded driver loop;
-        localCheckpoint per level cuts the lineage like the existing
-        traversal operators.
+    def varlen_frame(self, rel: RelPat, seeds: DataFrame,
+                     shortest: bool) -> DataFrame:
+        """(_from, _to) for ``*m..n``: one row per node-distinct path of
+        length m..n (path mode). For shortestPath, (_from, _to, _len):
+        one row per reachable pair at its minimum hop count (distance
+        mode; the shortest path is always simple, so this equals the min
+        over node-distinct paths).
 
-        ``seed`` (single column ``_seed_id``) restricts expansion to
-        paths STARTING from those ids. This must be explicit because
-        each level is localCheckpoint'ed — a materialization barrier
-        Catalyst cannot push the downstream anchor join through; without
-        seeding, an anchored pattern would expand from every node and
-        discard almost all of it at the join."""
+        ``seeds`` (_from, _to) are the source ids bound so far: each level
+        the kernel materializes is a barrier Catalyst cannot push the
+        downstream anchor join through, so an unseeded anchored pattern
+        would expand from every node and discard almost all of it."""
         # fail loudly instead of clamping silently: *6..8 used to return
         # an empty frame (min above the cap yields no levels) and *2..10
         # silently dropped paths of length 6-10
-        if rel.max_hops is not None and rel.max_hops > MAX_VARLEN_HOPS:
+        if rel.max_hops > gq.MAX_VARLEN_HOPS:
             raise CypherCompileError(
                 f"variable-length pattern *{rel.min_hops}..{rel.max_hops} "
-                f"exceeds MAX_VARLEN_HOPS={MAX_VARLEN_HOPS} (the reference's "
+                f"exceeds MAX_VARLEN_HOPS={gq.MAX_VARLEN_HOPS} (the reference's "
                 "own traversal clamp, query-optimization.ts:412-422); "
                 "rewrite the query with a bounded hop range")
-        max_h = min(rel.max_hops or MAX_VARLEN_HOPS, MAX_VARLEN_HOPS)
-        e = self.edge_frame(RelPat(rel.rtype, rel.direction)) \
-            .dropDuplicates(["_from", "_to"]).persist()
-        lvl1 = e
-        if seed is not None:
-            lvl1 = e.join(seed.withColumnRenamed("_seed_id", "_from"),
-                          "_from", "left_semi")
-        cur = lvl1.filter(F.col("_from") != F.col("_to")).select(
-            "_from", "_to", F.array("_from", "_to").alias("_path")) \
-            .localCheckpoint()
-        levels = {1: cur}
-        for length in range(2, max_h + 1):
-            step = e.select(F.col("_from").alias("_head"),
-                            F.col("_to").alias("_next"))
-            cur = (
-                cur.join(step, cur["_to"] == step["_head"])
-                .filter(~F.array_contains(F.col("_path"), F.col("_next")))
-                .select(F.col("_from"), F.col("_next").alias("_to"),
-                        F.concat(F.col("_path"),
-                                 F.array(F.col("_next"))).alias("_path"))
-                .localCheckpoint()
-            )
-            if cur.isEmpty():
-                break
-            levels[length] = cur
-        e.unpersist()
-        return levels
-
-    def varlen_pairs(self, rel: RelPat,
-                     seed: DataFrame | None = None) -> DataFrame:
-        """(_from, _to) with one row per node-distinct path of length in
-        [min_hops, max_hops]."""
-        levels = self._expand_levels(rel, seed)
-        out = None
-        for length, lv in levels.items():
-            if length < rel.min_hops:
-                continue
-            lv = lv.select("_from", "_to")
-            out = lv if out is None else out.unionByName(lv)
-        if out is None:
-            return levels[1].filter(F.lit(False)).select("_from", "_to")
-        return out
-
-    def shortest_pairs(self, rel: RelPat,
-                       seed: DataFrame | None = None) -> DataFrame:
-        """(_from, _to, _len) — ONE row per reachable pair at the
-        minimum hop count (Cypher shortestPath multiplicity). The
-        shortest path is always simple, so the min over node-distinct
-        paths equals the true BFS distance within the hop cap."""
-        levels = self._expand_levels(rel, seed)
-        out = None
-        for length, lv in levels.items():
-            lv = lv.select("_from", "_to", F.lit(length).alias("_len"))
-            out = lv if out is None else out.unionByName(lv)
-        return out.groupBy("_from", "_to").agg(F.min("_len").alias("_len"))
+        levels = gq._levels(self.edge_frame(RelPat(rel.rtype, rel.direction)),
+                            seeds, rel.max_hops, paths=not shortest)
+        if shortest:
+            return gq._union(levels[1:]).select(
+                "_from", "_to", F.col("_hops").alias("_len"))
+        return gq._union(levels[rel.min_hops:]).select("_from", "_to")
 
     def build(self, pattern: Pattern, bound: DataFrame | None) -> DataFrame:
         """Compile one pattern, joining against already-bound vars."""
@@ -199,15 +145,11 @@ class _PatternBuilder:
         for i in range(1, len(elems), 2):
             rel: RelPat = elems[i]
             node: NodePat = elems[i + 1]
-            if pattern.shortest or rel.min_hops is not None:
-                # anchor the iterative expansion on the bound sources —
-                # the per-level checkpoints are opaque to Catalyst, so
-                # this pruning cannot come from the planner
-                seed = cur.select(F.col(_ncol(prev, "id"))
-                                  .alias("_seed_id")) \
-                    .dropDuplicates(["_seed_id"])
-                pairs = (self.shortest_pairs(rel, seed) if pattern.shortest
-                         else self.varlen_pairs(rel, seed))
+            if rel.min_hops is not None:
+                ids = F.col(_ncol(prev, "id"))
+                pairs = self.varlen_frame(
+                    rel, cur.select(ids.alias("_from"), ids.alias("_to")),
+                    pattern.shortest)
             else:
                 pairs = self.edge_frame(rel)
             cur = cur.join(pairs, cur[_ncol(prev, "id")] == pairs["_from"]) \

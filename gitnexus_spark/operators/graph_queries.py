@@ -5,18 +5,20 @@ Reference: GraphQueryEngine regex-Cypher (src/ai/query-engine.ts:46-132,
 152-402) and adjacency-indexed traversal (src/core/graph/query.ts:30-197).
 The regex parser + per-class executors collapse into Spark SQL over two
 temp views; the only constructs needing explicit iteration are k-hop /
-variable-length paths (Catalyst has no recursion) — bounded driver loops
-over joins, caps carried over from query-optimization.ts:412-422.
+variable-length paths (Catalyst has no recursion) — one bounded driver
+loop over joins (``_levels``, also behind the Cypher front-end), caps
+carried over from query-optimization.ts:412-422.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-MAX_PATH_DEPTH = 5       # ref query-optimization.ts:412-422 rewrites *1..N>5 -> 5
+MAX_VARLEN_HOPS = 5      # ref query-optimization.ts:412-422 rewrites *1..N>5 -> 5
 DEFAULT_NODE_CAP = 500   # ref query.ts:102 BFS node cap
 
 
@@ -93,59 +95,94 @@ def write_adjacency_bucketed(edges: DataFrame, table: str,
         .mode("overwrite").format("parquet").saveAsTable(table)
 
 
-def match_pattern(nodes: DataFrame, edges: DataFrame, rel_type: str,
-                  src_label: str | None = None,
-                  dst_label: str | None = None) -> DataFrame:
-    """(a)-[:T]->(b) pattern join (J6, query-engine.ts:359-402).
-
-    Returns (src_id, src_name, type, dst_id, dst_name). The edges side is
-    filtered by partition column `type` first (partition-pruned scan at
-    rest), then two hash joins against nodes.
-    """
-    e = edges.filter(F.col("type") == rel_type)
-    a = nodes.select(F.col("id").alias("src"), F.col("label").alias("src_label"),
-                     F.col("name").alias("src_name"))
-    b = nodes.select(F.col("id").alias("dst"), F.col("label").alias("dst_label"),
-                     F.col("name").alias("dst_name"))
-    if src_label:
-        a = a.filter(F.col("src_label") == src_label)
-    if dst_label:
-        b = b.filter(F.col("dst_label") == dst_label)
-    return (
-        e.join(a, "src").join(b, "dst")
-        .select(F.col("src").alias("src_id"), "src_name",
-                F.col("type"), F.col("dst").alias("dst_id"), "dst_name")
-    )
+def _adjacency(edges: DataFrame, rel_types: list[str] | None = None,
+               direction: str = "out", *keep: str) -> DataFrame:
+    """Edges oriented for traversal: (_from, _to, *keep), filtered to
+    rel_types. direction 'out' follows src->dst, 'in' dst->src, 'both'
+    either way. Multiplicity is kept (a Cypher single hop returns one row
+    per relationship); the traversal kernel dedups what it walks."""
+    e = edges.filter(F.col("type").isin(rel_types)) if rel_types else edges
+    fwd = e.select(F.col("src").alias("_from"), F.col("dst").alias("_to"), *keep)
+    back = e.select(F.col("dst").alias("_from"), F.col("src").alias("_to"), *keep)
+    return {"out": fwd, "in": back, "both": fwd.unionByName(back)}[direction]
 
 
-def _k_hop_frontier(adj: DataFrame, start_ids: DataFrame, k: int,
-                    node_cap: int) -> DataFrame:
-    """Shared BFS loop over an adjacency relation (from_id, to_id).
-    Duplicate adjacency pairs are harmless for correctness (the frontier
-    dedups on id), so pre-deduping is the caller's cost choice."""
-    visited = start_ids.select(F.col("id")).dropDuplicates(["id"]) \
-        .withColumn("hop", F.lit(0)).localCheckpoint()
-    frontier = visited
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
 
-    for depth in range(1, min(k, MAX_PATH_DEPTH * 2) + 1):
-        # cap DETERMINISTICALLY: orderBy(id).limit is TakeOrdered — which
-        # nodes survive an over-cap frontier no longer depends on partition
-        # order (a bare .limit() did, breaking the determinism invariant)
-        nxt = (
-            frontier.join(adj, frontier.id == adj.from_id)
-            .select(F.col("to_id").alias("id"))
-            .dropDuplicates(["id"])
-            .join(visited.select("id"), "id", "left_anti")
-            .orderBy("id")
-            .limit(node_cap)
-            .withColumn("hop", F.lit(depth))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
+
+def _levels(adj: DataFrame, seeds: DataFrame, max_hops: int, *,
+            paths: bool = False, end: DataFrame | None = None,
+            node_cap: int | None = None) -> list[DataFrame]:
+    """The traversal kernel: bounded level-synchronous BFS (Catalyst has
+    no recursion), one frontier join per level over ``adj`` (an
+    ``_adjacency`` frame, deduplicated here).
+
+    seeds: (_from, _to) — the source a row is expanded for, and its start
+    node. Returns ``max_hops + 1`` frames, hop h at index h, each with
+    (_from, _to, _hops) where _to is the node reached:
+
+    - distance mode (default): one row per (source, node) at its minimum
+      hop count, deduped against every earlier level, so a level holds at
+      most |sources|·|V| rows. ``node_cap`` keeps the first node_cap rows
+      of each level by (_from, _to) — deterministic, unlike a bare limit.
+    - path mode (``paths=True``): one row per node-distinct path, carried
+      as ``_path``; a path never re-enters a node it holds.
+      ``end`` (column ``id``) marks rows reaching it with ``_hit`` and
+      stops at the first level that has one.
+
+    Each level is localCheckpoint'ed (cuts the lineage) and its row count
+    observed on that same job, so no level costs a separate emptiness
+    probe; an empty level stops the loop, and the levels past it are
+    empty frames of the level schema. Path-mode level 0 with no ``end``
+    (read by level 1 only) stays lazy. The last level is materialized
+    too: left lazy, its join made Catalyst inject runtime bloom-filter
+    subqueries into the caller's joins, which cost more jobs than one
+    checkpoint."""
+    step = adj.select(F.col("_from").alias("_head"),
+                      F.col("_to").alias("_next")).dropDuplicates().persist()
+    lvl = seeds.dropDuplicates().withColumn("_hops", F.lit(0))
+    if paths:
+        lvl = lvl.withColumn("_path", F.array("_to"))
+    if end is not None:
+        marks = F.broadcast(end.select(F.col("id").alias("_to"),
+                                       F.lit(True).alias("_hit"))
+                            .dropDuplicates(["_to"]))
+    levels: list[DataFrame] = []
+    try:
+        for hop in range(max_hops + 1):
+            if hop:
+                nxt = lvl.join(step, lvl["_to"] == step["_head"])
+                if paths:
+                    lvl = nxt.filter(~F.array_contains("_path", F.col("_next"))) \
+                        .select("_from", F.col("_next").alias("_to"),
+                                F.lit(hop).alias("_hops"),
+                                F.concat("_path", F.array("_next")).alias("_path"))
+                else:
+                    seen = _union([v.select("_from", "_to") for v in levels])
+                    lvl = nxt.select("_from", F.col("_next").alias("_to")) \
+                        .dropDuplicates().join(seen, ["_from", "_to"], "left_anti")
+                    if node_cap is not None:
+                        lvl = lvl.orderBy("_from", "_to").limit(node_cap)
+                    lvl = lvl.withColumn("_hops", F.lit(hop))
+            if end is not None:
+                lvl = lvl.join(marks, "_to", "left")
+            # level 0 in path mode with no end set is read only by level 1
+            if hop == 0 and paths and end is None:
+                levels.append(lvl)
+                continue
+            obs = Observation()
+            metrics = [F.count(F.lit(1)).alias("rows")]
+            if end is not None:
+                metrics.append(F.count("_hit").alias("hits"))
+            lvl = lvl.observe(obs, *metrics).localCheckpoint()
+            levels.append(lvl)
+            if obs.get["rows"] == 0 or obs.get.get("hits"):
+                break
+    finally:
+        step.unpersist()
+    empty = levels[-1].filter(F.lit(False))
+    return levels + [empty] * (max_hops + 1 - len(levels))
 
 
 def k_hop(edges: DataFrame, start_ids: DataFrame, k: int,
@@ -157,21 +194,8 @@ def k_hop(edges: DataFrame, start_ids: DataFrame, k: int,
     minimum hop distance (<= k). Each hop is one join; AQE handles the
     shrinking frontier. node_cap mirrors the reference's traversal cap.
     """
-    e = edges
-    if rel_types:
-        e = e.filter(F.col("type").isin(rel_types))
-    if direction == "out":
-        adj = e.select(F.col("src").alias("from_id"), F.col("dst").alias("to_id"))
-    elif direction == "in":
-        adj = e.select(F.col("dst").alias("from_id"), F.col("src").alias("to_id"))
-    else:  # both
-        adj = e.select(F.col("src").alias("from_id"), F.col("dst").alias("to_id")) \
-            .unionByName(e.select(F.col("dst").alias("from_id"),
-                                  F.col("src").alias("to_id")))
-    adj = adj.dropDuplicates(["from_id", "to_id"]).persist()
-    visited = _k_hop_frontier(adj, start_ids, k, node_cap)
-    adj.unpersist()
-    return visited
+    return _k_hop(_adjacency(edges, rel_types, direction), start_ids, k,
+                  node_cap)
 
 
 def k_hop_bucketed(spark, table: str, start_ids: DataFrame, k: int,
@@ -192,16 +216,18 @@ def k_hop_bucketed(spark, table: str, start_ids: DataFrame, k: int,
     query.ts:30-60; at rest that is two bucketed tables). A mismatched
     pairing is still CORRECT — the bucketed side merely regains an
     exchange."""
-    e = spark.table(table)
-    if rel_types:
-        e = e.filter(F.col("type").isin(rel_types))
-    if direction == "out":
-        adj = e.select(F.col("src").alias("from_id"), F.col("dst").alias("to_id"))
-    elif direction == "in":
-        adj = e.select(F.col("dst").alias("from_id"), F.col("src").alias("to_id"))
-    else:
+    if direction not in ("out", "in"):
         raise ValueError(f"direction must be out or in, got {direction!r}")
-    return _k_hop_frontier(adj, start_ids, k, node_cap)
+    return _k_hop(_adjacency(spark.table(table), rel_types, direction),
+                  start_ids, k, node_cap)
+
+
+def _k_hop(adj: DataFrame, start_ids: DataFrame, k: int,
+           node_cap: int) -> DataFrame:
+    # one shared source: a node's hop is its distance from ANY start
+    seeds = start_ids.select(F.lit(0).alias("_from"), F.col("id").alias("_to"))
+    return _union(_levels(adj, seeds, k, node_cap=node_cap)) \
+        .select(F.col("_to").alias("id"), F.col("_hops").alias("hop"))
 
 
 def paths_between(edges: DataFrame, start_ids: DataFrame, end_ids: DataFrame,
@@ -216,110 +242,48 @@ def paths_between(edges: DataFrame, start_ids: DataFrame, end_ids: DataFrame,
     deterministic closure of that: ALL cycle-free shortest paths from
     start to end (hops == minimum), ordered by path, capped at max_paths.
 
-    Level-synchronous expansion with array_contains cycle pruning; stops
-    at the first level that reaches an end node (never enumerates deeper).
-    Each level is one join; the end-set probe is a broadcast semi-join.
-    Scale note: caps (max_depth<=6, max_paths) are the reference's own
-    cost model; for dense hub graphs swap in per-node best-path dedup per
-    level (frontier bounded by |V|) before the product can grow.
+    Path-mode traversal that stops at the first level reaching an end
+    node (never enumerates deeper); the end-set probe is a broadcast join
+    observed on the level's own checkpoint job.
+    Scale note: the enumerated paths are every node-distinct path up to
+    the hit level, so the reference's max_depth=6 bounds a product that
+    grows as degree^hops on a hub graph; distance mode (k_hop, Cypher
+    shortestPath) is the form whose frontier stays bounded by |V|.
 
     Returns (path: array<id>, hops).
     """
-    e = edges
-    if rel_types:
-        e = e.filter(F.col("type").isin(rel_types))
-    adj = e.select(F.col("src").alias("from_id"), F.col("dst").alias("to_id")) \
-        .dropDuplicates(["from_id", "to_id"]).persist()
-    end = end_ids.select(F.col("id").alias("_end")).dropDuplicates(["_end"])
-
-    frontier = start_ids.select(
-        F.array(F.col("id")).alias("path"),
-        F.col("id").alias("head_id"),
-        F.lit(0).alias("hops"),
-    ).localCheckpoint()
-
-    # trivial case: start node IS an end node (reference returns empty path)
-    found = frontier.join(F.broadcast(end), frontier.head_id == F.col("_end"), "semi")
-    if found.isEmpty():
-        found = None
-        for depth in range(1, max_depth + 1):
-            frontier = (
-                frontier.join(adj, frontier.head_id == adj.from_id)
-                .filter(~F.array_contains(F.col("path"), F.col("to_id")))
-                .select(
-                    F.concat(F.col("path"), F.array(F.col("to_id"))).alias("path"),
-                    F.col("to_id").alias("head_id"),
-                    F.lit(depth).alias("hops"),
-                )
-                .localCheckpoint()
-            )
-            if frontier.isEmpty():
-                break
-            hits = frontier.join(F.broadcast(end),
-                                 frontier.head_id == F.col("_end"), "semi")
-            if not hits.isEmpty():
-                found = hits    # first (= shortest) level only
-                break
-    adj.unpersist()
-    if found is None:
-        return frontier.filter(F.lit(False)).select("path", "hops")
+    seeds = start_ids.select(F.col("id").alias("_from"), F.col("id").alias("_to"))
+    levels = _levels(_adjacency(edges, rel_types), seeds, max_depth,
+                     paths=True, end=end_ids)
     return (
-        found.orderBy(F.col("path").cast("string"))
+        _union(levels).filter(F.col("_hit"))
+        .orderBy(F.col("_path").cast("string"))
         .limit(max_paths)
-        .select("path", "hops")
+        .select(F.col("_path").alias("path"), F.col("_hops").alias("hops"))
     )
 
 
 def var_length_paths(edges: DataFrame, start_ids: DataFrame, rel_type: str,
                      min_hops: int = 1, max_hops: int = 3,
                      max_paths: int = 10) -> DataFrame:
-    """Variable-length paths (Q6, query-engine.ts:254-323): bounded
-    iterative self-join accumulating the path as an id array; cycles
-    pruned with array_contains; capped like the reference (<= max_paths
-    per start node, max depth clamped to MAX_PATH_DEPTH)."""
-    max_hops = min(max_hops, MAX_PATH_DEPTH)
-    e = edges.filter(F.col("type") == rel_type) \
-        .select(F.col("src").alias("from_id"), F.col("dst").alias("to_id")) \
-        .dropDuplicates(["from_id", "to_id"]).persist()
-
-    paths = start_ids.select(
-        F.col("id").alias("start_id"),
-        F.array(F.col("id")).alias("path"),
-        F.col("id").alias("head_id"),
-        F.lit(0).alias("hops"),
-    ).localCheckpoint()
-    results = []
-    frontier = paths
-    for depth in range(1, max_hops + 1):
-        frontier = (
-            frontier.join(e, frontier.head_id == e.from_id)
-            .filter(~F.array_contains(F.col("path"), F.col("to_id")))
-            .select(
-                "start_id",
-                F.concat(F.col("path"), F.array(F.col("to_id"))).alias("path"),
-                F.col("to_id").alias("head_id"),
-                F.lit(depth).alias("hops"),
-            )
-            .localCheckpoint()
-        )
-        if frontier.isEmpty():
-            break
-        if depth >= min_hops:
-            results.append(frontier)
-    e.unpersist()
-    if not results:
-        return paths.filter(F.lit(False)).select("start_id", "path", "hops")
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
+    """Variable-length paths (Q6, query-engine.ts:254-323): node-distinct
+    paths of min_hops..max_hops edges accumulated as an id array; capped
+    like the reference (<= max_paths per start node). A hop range past
+    MAX_VARLEN_HOPS raises, as the Cypher front-end does."""
+    if not 1 <= min_hops <= max_hops <= MAX_VARLEN_HOPS:
+        raise ValueError(
+            f"hop range {min_hops}..{max_hops} outside "
+            f"1..MAX_VARLEN_HOPS={MAX_VARLEN_HOPS}")
+    seeds = start_ids.select(F.col("id").alias("_from"), F.col("id").alias("_to"))
+    levels = _levels(_adjacency(edges, [rel_type]), seeds, max_hops,
+                     paths=True)
     # cap paths per start node deterministically (path array as tiebreak)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("start_id").orderBy("hops", F.col("path").cast("string"))
+    w = Window.partitionBy("_from").orderBy("_hops", F.col("_path").cast("string"))
     return (
-        out.withColumn("rn", F.row_number().over(w))
+        _union(levels[min_hops:]).withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= max_paths)
-        .select("start_id", "path", "hops")
+        .select(F.col("_from").alias("start_id"), F.col("_path").alias("path"),
+                F.col("_hops").alias("hops"))
     )
 
 

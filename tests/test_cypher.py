@@ -184,15 +184,11 @@ def test_auto_limit_applied(graph):
 
 
 def test_equivalence_with_match_pattern_operator(graph):
-    """Compiled (a)-[:T]->(b) == operators.graph_queries.match_pattern."""
-    from gitnexus_spark.operators.graph_queries import match_pattern
-
-    nodes, edges = graph
+    """Compiled (a)-[:T]->(b) == the fixture's LINKS_TO pairs."""
     via_cypher = run(graph, "MATCH (a:Page)-[:LINKS_TO]->(b:Page) "
                             "RETURN a.id AS src_id, b.id AS dst_id")
-    via_op = match_pattern(nodes, edges, "LINKS_TO", "Page", "Page") \
-        .select("src_id", "dst_id")
-    assert rows(via_cypher) == rows(via_op)
+    assert rows(via_cypher) == [("n1", "n2"), ("n1", "n3"), ("n2", "n3"),
+                                ("n3", "n1")]
 
 
 def test_compile_errors(graph):
@@ -316,6 +312,75 @@ def test_shortest_path_excludes_self(graph):
               "-[:LINKS_TO*1..4]->(b:Page {name: 'home'})) "
               "RETURN length(p) AS hops")
     assert rows(out) == []
+
+
+def test_shortest_path_hub_graph_frontier_bounded(spark, monkeypatch):
+    """On a complete digraph every shortest path has length 1; the
+    traversal kernel's distance mode keeps every level frame within
+    |seeds|·|V| rows instead of enumerating all 5-hop paths."""
+    from gitnexus_spark.operators import graph_queries as gq
+
+    n = 20
+    nodes = spark.createDataFrame(
+        [(f"p{i}", "Page", f"p{i}", None) for i in range(n)],
+        "id string, label string, name string, url string")
+    edges = spark.createDataFrame(
+        [(f"p{i}", f"p{j}", "LINKS_TO") for i in range(n) for j in range(n)
+         if i != j], "src string, dst string, type string")
+    levels = []
+    kernel = gq._levels
+    monkeypatch.setattr(gq, "_levels", lambda *a, **kw: (
+        levels.append(kernel(*a, **kw)) or levels[-1]))
+    got = cypher_query(
+        nodes, edges,
+        "MATCH p = shortestPath((a:Page)-[:LINKS_TO*1..5]->(b:Page)) "
+        "RETURN a.name AS a, b.name AS b, length(p) AS hops",
+        auto_limit=None).collect()
+    assert len(got) == n * (n - 1)
+    assert {r["hops"] for r in got} == {1}
+    assert len(levels) == 1
+    assert max(lv.count() for lv in levels[0]) <= n * n
+
+
+def test_anchored_varlen_lookup_job_count(spark, tmp_path):
+    """The anchored *1..2 page-reach lookup (kgbench's page_reach shape,
+    over graph tables at rest partitioned like the pipeline's) runs fewer
+    Spark jobs than the 12 it ran when every level was also probed with
+    isEmpty (same fixture, local[4])."""
+    n = 300
+    links = [(i, (3 * i + 1) % n) for i in range(n)] + \
+        [(i, (11 * i + 7) % n) for i in range(n)]
+    spark.createDataFrame(
+        [(f"p{i}", "Page", f"page{i}", None) for i in range(n)]
+        + [(f"e{i}", "Entity", f"Org_{i}", None) for i in range(n)],
+        "id string, label string, name string, url string") \
+        .write.partitionBy("label").parquet(str(tmp_path / "nodes"))
+    spark.createDataFrame(
+        [(f"p{s}", f"p{d}", "LINKS_TO") for s, d in links]
+        + [(f"p{i}", f"e{(7 * i) % n}", "MENTIONS") for i in range(n)],
+        "src string, dst string, type string") \
+        .write.partitionBy("type").parquet(str(tmp_path / "edges"))
+    nodes = spark.read.parquet(str(tmp_path / "nodes"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+
+    def lookup(i):
+        return {r["name"] for r in cypher_query(
+            nodes, edges,
+            f"MATCH (a:Page {{name: 'page{i}'}})-[:LINKS_TO*1..2]->(b:Page) "
+            "RETURN DISTINCT b.name AS name").collect()}
+
+    lookup(4)  # warm-up: the first query over new files pays setup jobs
+    sc = spark.sparkContext
+    sc.setJobGroup("varlen-lookup", "anchored *1..2 lookup")
+    try:
+        got = lookup(5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    one = {d for s, d in links if s == 5}
+    two = {d for s, d in links if s in one}
+    assert got == {f"page{d}" for d in (one | two) - {5}}   # no self-loops
+    assert len(sc.statusTracker().getJobIdsForGroup("varlen-lookup")) < 12
 
 
 @pytest.mark.parametrize("bad", [

@@ -20,10 +20,13 @@ def graph(spark):
 
 
 def test_match_pattern(graph):
-    from gitnexus_spark.operators.graph_queries import match_pattern
+    from gitnexus_spark.cypher import cypher_query
 
     nodes, edges = graph
-    got = match_pattern(nodes, edges, "MENTIONS", "Page", "Entity").collect()
+    got = cypher_query(nodes, edges,
+                       "MATCH (a:Page)-[:MENTIONS]->(b:Entity) "
+                       "RETURN a.name AS src_name, b.name AS dst_name",
+                       auto_limit=None).collect()
     assert {(r["src_name"], r["dst_name"]) for r in got} == \
         {("p1", "Acme"), ("p2", "Acme"), ("p5", "Zorg")}
 
@@ -56,6 +59,109 @@ def test_var_length_paths(spark, graph):
     got = var_length_paths(edges, start, "LINKS_TO", 1, 3).collect()
     paths = {tuple(r["path"]) for r in got}
     assert paths == {("n1", "n2"), ("n1", "n2", "n5")}
+
+
+def test_var_length_paths_rejects_hops_over_clamp(spark, graph):
+    """One clamp, one policy: a hop range past MAX_VARLEN_HOPS raises, as
+    the Cypher front-end does, instead of silently dropping paths."""
+    from gitnexus_spark.operators.graph_queries import var_length_paths
+
+    _, edges = graph
+    start = spark.createDataFrame([("n1",)], ["id"])
+    with pytest.raises(ValueError):
+        var_length_paths(edges, start, "LINKS_TO", 1, 6)
+
+
+def test_k_hop_honours_k(spark):
+    """k bounds the hop count, with no hidden clamp below it."""
+    from gitnexus_spark.operators.graph_queries import k_hop
+
+    edges = spark.createDataFrame(
+        [(f"c{i}", f"c{i + 1}") for i in range(12)], "src string, dst string")
+    start = spark.createDataFrame([("c0",)], ["id"])
+    got = {r["id"]: r["hop"] for r in k_hop(edges, start, 12).collect()}
+    assert got == {f"c{i}": i for i in range(13)}
+
+
+def _py_adj(edges):
+    adj = {}
+    for s, d in set(edges):
+        adj.setdefault(s, set()).add(d)
+    return adj
+
+
+def _py_dist(adj, s):
+    dist, frontier, hop = {s: 0}, {s}, 0
+    while frontier:
+        hop += 1
+        frontier = {v for u in frontier for v in adj.get(u, ())} - set(dist)
+        dist.update(dict.fromkeys(frontier, hop))
+    return dist
+
+
+def _py_paths(adj, s, max_len):
+    out, stack = [], [(s,)]
+    while stack:
+        p = stack.pop()
+        if len(p) > 1:
+            out.append(p)
+        if len(p) <= max_len:
+            stack.extend(p + (v,) for v in adj.get(p[-1], ()) if v not in p)
+    return out
+
+
+def test_traversal_modes_agree(spark):
+    """Distance mode (Cypher shortestPath, k_hop) and path mode (Cypher
+    *m..n, var_length_paths, paths_between) against pure-Python BFS/DFS
+    on a graph with a cycle, a self-loop, parallel edges and a diamond."""
+    from collections import Counter
+
+    from gitnexus_spark.cypher import cypher_query
+    from gitnexus_spark.operators.graph_queries import (
+        k_hop, paths_between, var_length_paths)
+
+    links = [("a", "b"), ("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"),
+             ("d", "a"), ("d", "e"), ("e", "e"), ("e", "f"), ("f", "d")]
+    ids = sorted({n for e in links for n in e})
+    nodes = spark.createDataFrame([(n, "Page", n, None) for n in ids],
+                                  "id string, label string, name string, url string")
+    edges = spark.createDataFrame(
+        [(s, d, "LINKS_TO") for s, d in links] + [("a", "f", "MENTIONS")],
+        "src string, dst string, type string")
+    adj = _py_adj(links)
+    dist = {s: _py_dist(adj, s) for s in ids}
+
+    def q(text):
+        return cypher_query(nodes, edges, text, auto_limit=None).collect()
+
+    short = sorted(tuple(r) for r in q(
+        "MATCH p = shortestPath((x:Page)-[:LINKS_TO*1..5]->(y:Page)) "
+        "RETURN x.id AS s, y.id AS t, length(p) AS hops"))
+    assert short == sorted((s, t, h) for s in ids for t, h in dist[s].items()
+                           if t != s)
+    for s in ids:
+        start = spark.createDataFrame([(s,)], ["id"])
+        hops = sorted(tuple(r) for r in
+                      k_hop(edges, start, 5, rel_types=["LINKS_TO"]).collect())
+        assert hops == sorted(dist[s].items())
+
+    want = Counter((p[0], p[-1]) for s in ids for p in _py_paths(adj, s, 3))
+    varlen = {(r["s"], r["t"]): r["n"] for r in q(
+        "MATCH (x:Page)-[:LINKS_TO*1..3]->(y:Page) "
+        "RETURN x.id AS s, y.id AS t, COUNT(*) AS n")}
+    assert varlen == want
+    starts = spark.createDataFrame([(s,) for s in ids], ["id"])
+    vl = var_length_paths(edges, starts, "LINKS_TO", 1, 3, max_paths=1000)
+    assert Counter((r["start_id"], r["path"][-1]) for r in vl.collect()) == want
+
+    for s in ids:
+        t = max(sorted(dist[s]), key=dist[s].get)   # farthest from s
+        start = spark.createDataFrame([(s,)], ["id"])
+        end = spark.createDataFrame([(t,)], ["id"])
+        got = [(tuple(r["path"]), r["hops"]) for r in paths_between(
+            edges, start, end, max_paths=1000, rel_types=["LINKS_TO"]).collect()]
+        assert got == sorted((p, dist[s][t]) for p in _py_paths(adj, s, dist[s][t])
+                             if p[-1] == t and len(p) == dist[s][t] + 1)
 
 
 def test_search_nodes(graph):

@@ -157,8 +157,9 @@ def reference_queries(nodes: DataFrame, edges: DataFrame) -> list[dict]:
 
 def _varlen_equiv(ent: DataFrame, rel: DataFrame, max_hops: int) -> DataFrame:
     """One row per node-distinct path of length 1..max_hops — the
-    front-end's var-length semantics (compiler.varlen_pairs: paths are
-    cycle-free over the deduplicated edge set, one row per path)."""
+    front-end's var-length semantics (the path mode of the traversal
+    kernel, graph_queries._levels: paths are cycle-free over the
+    deduplicated edge set, one row per path)."""
     e = rel.select("src", "dst").distinct()
     # paths[i] = DataFrame of (n0, n1, ..., n_{i+1}) node-distinct chains
     p1 = e.filter(F.col("src") != F.col("dst")) \
