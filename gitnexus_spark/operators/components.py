@@ -171,7 +171,7 @@ def _large_small_star(
     return out
 
 
-NORM_KEY_SQL = "regexp_replace(lower(name), '[^a-z0-9]', '')"
+_NORM_KEY_SQL = "regexp_replace(lower(name), '[^a-z0-9]', '')"
 
 
 def coreference_edges(
@@ -198,7 +198,7 @@ def coreference_edges(
     names = names.dropDuplicates(["name"])
 
     # star edges within each normalized-key block: name -> min(name)
-    normed = names.withColumn("nkey", F.expr(NORM_KEY_SQL))
+    normed = names.withColumn("nkey", F.expr(_NORM_KEY_SQL))
     w = Window.partitionBy("nkey")
     norm_edges = (
         normed.withColumn("rep", F.min("name").over(w))

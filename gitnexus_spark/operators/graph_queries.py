@@ -37,12 +37,20 @@ def lookup_edges(spark, out_dir: str, src: str | None = None,
     Morton rectangles of (src, dst), so a filter on EITHER endpoint (or
     both) prunes by native parquet string min/max stats; the plain
     type-partitioned table, where an endpoint filter touches every file,
-    is the fallback."""
+    is the fallback — its current snapshot when a SnapshotWriter wrote
+    it (a refresh rewrites ``edges_zorder`` with it)."""
     import os
+
+    from ..sources.snapshots import SnapshotWriter
     zp = os.path.join(out_dir, "edges_zorder")
-    path = zp if os.path.exists(os.path.join(zp, "_SUCCESS")) \
-        else os.path.join(out_dir, "edges")
-    df = spark.read.parquet(path)
+    path = os.path.join(out_dir, "edges")
+    w = SnapshotWriter(spark)
+    if os.path.exists(os.path.join(zp, "_SUCCESS")):
+        df = spark.read.parquet(zp)
+    elif w.exists(path):
+        df = w.read(path)
+    else:
+        df = spark.read.parquet(path)
     if src is not None:
         df = df.filter(F.col("src") == src)
     if dst is not None:

@@ -29,8 +29,8 @@ nondeterministic under parallelism); we impose a total order
 (score DESC, [url-distance ASC,] canonical name ASC) in every top-k
 window.
 
-One linking path: KGPipeline, the incremental refresh, the driver's
-light pipeline and ``link_mentions`` all compose the same pieces —
+One linking path: KGPipeline, the driver's light pipeline and
+``link_mentions`` all compose the same pieces —
 ``exact_resolution_map`` -> ``missed_candidates`` -> ``with_fuzzy_top1``
 (``name_resolution_map`` is that composition) and ``stage_columns`` for
 precedence; they differ only in what they persist.
@@ -103,9 +103,7 @@ def exact_missed() -> Column:
 def fuzzy_probe(name_map: DataFrame) -> DataFrame | None:
     """(name) of the map rows fuzzy may link, or None when there are
     none: an empty fuzzy plan still costs several fixed shuffle rounds,
-    so callers skip it whole. (The refresh path's batch-scale re-probes
-    filter on ``exact_missed`` directly and skip no plan — a probe there
-    would be one more job per batch.)"""
+    so callers skip it whole."""
     names = name_map.filter(exact_missed()).select("name")
     return None if names.isEmpty() else names
 

@@ -189,8 +189,7 @@ class SnapshotWriter:
                           tag=tag)
 
     def replace_into(self, path: str, source: DataFrame,
-                     match_cols: list[str], tag: str | None = None,
-                     delete_keys: DataFrame | None = None) -> int:
+                     match_cols: list[str], tag: str | None = None) -> int:
         """Iceberg dynamic-overwrite (`overwritePartitions`) analogue:
         every target row whose match_cols tuple occurs in `source` is
         replaced by the source rows for that tuple (delete + insert),
@@ -199,18 +198,10 @@ class SnapshotWriter:
         url replaces the page's whole extracted row set, however many
         rows it previously produced (row-level merge_into can't shrink a
         group). One anti-join on the key set; AQE broadcasts it when the
-        batch is small.
-
-        delete_keys: optional extra key tuples (match_cols schema) whose
-        target rows are REMOVED even when the source carries no
-        replacement — the refresh path uses this to retire rows for a
-        key universe that shrank (a name no one mentions anymore)."""
+        batch is small."""
         if not self.exists(path):
             return self.write(source, path, op="replace", tag=tag)
         keys = source.select(*match_cols).dropDuplicates(match_cols)
-        if delete_keys is not None:
-            keys = keys.unionByName(delete_keys.select(*match_cols)) \
-                       .dropDuplicates(match_cols)
         kept = self.read(path).join(keys, match_cols, "left_anti")
         part = _load_manifest(path)[-1].get("partition_by") or None
         return self.write(kept.unionByName(source), path,

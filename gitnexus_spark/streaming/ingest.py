@@ -11,7 +11,10 @@ Structured Stream over arriving page batches with
 - foreachBatch running the SAME batch extraction operators per
   micro-batch (single code path for batch + streaming), appending to
   the extracted table — the incremental analogue of per-pass
-  checkpointing.
+  checkpointing;
+- re-crawl batches that keep an at-rest graph current
+  (start_full_refresh_stream: every micro-batch through
+  plans.refresh.refresh_from_batch).
 """
 
 from __future__ import annotations
@@ -58,61 +61,22 @@ def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
     )
 
 
-def start_incremental_reingest(pages_stream: DataFrame, table_dir: str,
-                               checkpoint_dir: str):
-    """Incremental RE-INGEST (trie.ts:228-254 / SURVEY `overwritePartitions`
-    analogue): each micro-batch's pages are extracted with the batch
-    operator and committed to the extracted snapshot table with
-    replace-by-url semantics — a re-crawled url's previous derived rows
-    (all of them) are replaced by the new extraction, new urls append,
-    untouched urls keep their rows. Every micro-batch is one snapshot:
-    the table's history IS the crawl history (time travel to any crawl
-    state), and a restart resumes from the stream checkpoint without
-    double-applying a batch (the replace is idempotent per url set).
-
-    Unlike start_extraction_stream, urls are NOT deduped with stateful
-    cross-batch state: a later fetch of a known url is an intentional
-    re-crawl, not a duplicate. Dedup is within-batch only — the latest
-    warc_ts per url wins (two fetches in one crawl batch collapse)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotWriter
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        latest = (
-            batch_df.withColumn(
-                "_rn", F.row_number().over(
-                    Window.partitionBy("url")
-                    .orderBy(F.col("warc_ts").desc_nulls_last(), "html")))
-            .filter(F.col("_rn") == 1).drop("_rn")
-        )
-        writer = SnapshotWriter(batch_df.sparkSession)
-        writer.replace_into(table_dir, extract_all(latest), ["url"])
-
-    return (
-        pages_stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_full_refresh_stream(pages_stream: DataFrame, kg_out_dir: str,
                               checkpoint_dir: str,
                               alias_dict: DataFrame | None = None):
     """Incremental re-ingest through ALL FOUR PASSES per micro-batch
     (VERDICT r03 missing #2 closed end-to-end): each arriving crawl
-    batch flows through plans.refresh.refresh_from_batch, so the
-    registry, name/canonical maps, resolved triples, and the final
-    nodes/edges tables stay consistent with every re-crawl — the full
-    streaming analogue of trie.ts:228-254, not just the extracted-table
-    replace. Every table advances one snapshot per batch (crawl history
-    = snapshot history); restart resumes from the stream checkpoint, and
-    the keyed replaces are idempotent per batch. The per-batch cost is
-    batch-proportional (see refresh_from_batch's scale notes), which is
-    exactly the contract a streaming sink needs."""
+    batch flows through plans.refresh.refresh_from_batch, so a re-crawled
+    url replaces its whole extracted row set (new urls append, untouched
+    urls keep theirs) and the registry, name/canonical maps, resolved
+    triples and the final nodes/edges tables are re-derived to match —
+    the streaming analogue of trie.ts:228-254. Urls are not deduped
+    across batches: a later fetch of a known url is a re-crawl; within a
+    batch the latest warc_ts wins. Every table advances one snapshot per
+    batch (crawl history = snapshot history); restart resumes from the
+    stream checkpoint, and a replayed batch re-derives the same graph.
+    Extraction is batch-sized; passes 3-4 cost O(corpus) per batch (see
+    refresh_from_batch's cost notes)."""
     from ..plans.refresh import refresh_from_batch
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:

@@ -57,25 +57,26 @@ def test_stream_extraction_end_to_end(spark, stream_dirs):
 
 
 def test_incremental_reingest_replaces_recrawled_urls(spark, stream_dirs):
-    """A re-crawl of u1 must REPLACE u1's whole derived row set in the
-    extracted snapshot table (not append a second copy), new urls append,
-    untouched urls persist — and each crawl batch is a time-travelable
-    snapshot."""
+    """A re-crawl of u1 arriving on the refresh stream must REPLACE u1's
+    whole derived row set in the extracted snapshot table (not append a
+    second copy), new urls append, untouched urls persist — and each
+    crawl batch is a time-travelable snapshot."""
     import datetime as dt
 
+    from gitnexus_spark.plans.pipeline import KGPipeline
     from gitnexus_spark.sources.snapshots import SnapshotWriter
     from gitnexus_spark.streaming.ingest import (read_page_stream,
-                                                 start_incremental_reingest)
+                                                 start_full_refresh_stream)
 
-    tbl = stream_dirs["out"]
+    kg = stream_dirs["out"]
+    tbl = f"{kg}/extracted"
+    w = SnapshotWriter(spark)
     ts = dt.datetime(2024, 1, 1)
-    _write_batch(spark, stream_dirs["in"], [
+    KGPipeline(spark, kg, writer=w).run(spark.createDataFrame([
         ("u1", ts, b"<p>Acme founded Zorg.</p>", "Acme founded Zorg.", "en"),
         ("u2", ts, b"<p>Beta visited Acme.</p>", "Beta visited Acme.", "en"),
-    ])
-    q = start_incremental_reingest(read_page_stream(spark, stream_dirs["in"]),
-                                   tbl, stream_dirs["ckpt"])
-    q.awaitTermination(120)
+    ], "url string, warc_ts timestamp, html binary, text string,"
+       " lang string"))
 
     # crawl 2: u1 re-crawled with NEW content, u3 is new, u2 untouched
     ts2 = dt.datetime(2024, 1, 2)
@@ -83,11 +84,10 @@ def test_incremental_reingest_replaces_recrawled_urls(spark, stream_dirs):
         ("u1", ts2, b"<p>Acme acquired Beta.</p>", "Acme acquired Beta.", "en"),
         ("u3", ts2, b"<p>Gamma endorsed Acme.</p>", "Gamma endorsed Acme.", "en"),
     ])
-    q2 = start_incremental_reingest(read_page_stream(spark, stream_dirs["in"]),
-                                    tbl, stream_dirs["ckpt"])
-    q2.awaitTermination(120)
+    q = start_full_refresh_stream(read_page_stream(spark, stream_dirs["in"]),
+                                  kg, stream_dirs["ckpt"])
+    q.awaitTermination(300)
 
-    w = SnapshotWriter(spark)
     triples = {(r["url"], r["name"], r["pred"], r["obj"]) for r in
                w.read(tbl).filter("item = 'triple'").collect()}
     assert triples == {
@@ -99,7 +99,7 @@ def test_incremental_reingest_replaces_recrawled_urls(spark, stream_dirs):
     first = {(r["url"], r["name"], r["pred"], r["obj"]) for r in
              w.read(tbl, snapshot_id=1).filter("item = 'triple'").collect()}
     assert ("u1", "Acme", "founded", "Zorg") in first
-    assert [e["op"] for e in w.history(tbl)] == ["replace", "replace"]
+    assert [e["op"] for e in w.history(tbl)] == ["overwrite", "replace"]
 
 
 def test_streaming_sessionize_stateful(spark, tmp_path):
