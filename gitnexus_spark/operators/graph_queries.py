@@ -31,26 +31,19 @@ def register_views(nodes: DataFrame, edges: DataFrame) -> None:
 
 def lookup_edges(spark, out_dir: str, src: str | None = None,
                  dst: str | None = None) -> DataFrame:
-    """Endpoint edge lookup over a pipeline warehouse. Reads the
-    z-ordered layout (``edges_zorder``, written by
-    KGPipeline(optimize_layout=True)) when present — its files hold
-    Morton rectangles of (src, dst), so a filter on EITHER endpoint (or
-    both) prunes by native parquet string min/max stats; the plain
-    type-partitioned table, where an endpoint filter touches every file,
-    is the fallback — its current snapshot when a SnapshotWriter wrote
-    it (a refresh rewrites ``edges_zorder`` with it)."""
+    """Endpoint edge lookup over a pipeline warehouse, on the current
+    snapshot. Reads the z-ordered layout (``edges_zorder``, written by
+    KGPipeline(optimize_layout=True) and rewritten by every refresh)
+    when present — its files hold Morton rectangles of (src, dst), so a
+    filter on EITHER endpoint (or both) prunes by native parquet string
+    min/max stats; else the type-partitioned ``edges`` table, where an
+    endpoint filter touches every file."""
     import os
 
     from ..sources.snapshots import SnapshotWriter
-    zp = os.path.join(out_dir, "edges_zorder")
-    path = os.path.join(out_dir, "edges")
     w = SnapshotWriter(spark)
-    if os.path.exists(os.path.join(zp, "_SUCCESS")):
-        df = spark.read.parquet(zp)
-    elif w.exists(path):
-        df = w.read(path)
-    else:
-        df = spark.read.parquet(path)
+    zp = os.path.join(out_dir, "edges_zorder")
+    df = w.read(zp if w.exists(zp) else os.path.join(out_dir, "edges"))
     if src is not None:
         df = df.filter(F.col("src") == src)
     if dst is not None:

@@ -85,13 +85,13 @@ def with_zorder(df: DataFrame, cols: list[str],
     return df.withColumn(out_col, _interleave(*buckets))
 
 
-def write_zordered(df: DataFrame, cols: list[str], path: str,
-                   num_files: int = 16) -> None:
-    """Rewrite df at `path` laid out along the Morton curve: range
-    partition by the code (equal-frequency file splits), sort within
-    partitions so row groups inherit the locality, drop the helper."""
+def zordered(df: DataFrame, cols: list[str],
+             num_files: int = 16) -> DataFrame:
+    """df laid out along the Morton curve, ready to write: range
+    partitioned by the code (equal-frequency file splits), sorted
+    within partitions so row groups inherit the locality, helper
+    dropped. Only the layout changes; the rows are df's."""
     z = with_zorder(df, cols)
-    (z.repartitionByRange(num_files, F.col("_z"))
-     .sortWithinPartitions("_z")
-     .drop("_z")
-     .write.mode("overwrite").parquet(path))
+    return (z.repartitionByRange(num_files, F.col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z"))

@@ -8,26 +8,21 @@ reach 1e8-1e9 rows — at that size a forced broadcast is an OOM, not a
 plan choice.
 
 The pipeline already OBSERVES every committed dimension's row count on
-the write job itself (lineage via df.observe), so the hint can be a
+the write job itself (the snapshot commit's df.observe, kept in the
+table manifest, so a resumed pass has it too), so the hint can be a
 decision instead of an assumption:
 
 - observed size under the threshold -> ``F.broadcast`` (the common case:
   vocabularies are usually small relative to the fact table);
-- over the threshold, or unknown -> leave the join UNHINTED. Both sides
+- over the threshold -> leave the join UNHINTED. Both sides
   of every gated join are keyed on ``name``, so Catalyst plans a
   co-partitioned shuffle join (SortMergeJoin / ShuffledHashJoin), and
   AQE may still upgrade to broadcast at runtime if the actual shuffle
   bytes turn out small — the decision stays with the engine, backed by
   real sizes, never forced.
-
-On RESUME the observed count is unavailable (-1 in lineage); the gate
-then falls back to the committed table's at-rest parquet footprint —
-driver-side file metadata, no job.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,29 +32,9 @@ from pyspark.sql import functions as F
 #: far above any real vocabulary that SHOULD be broadcast.
 BROADCAST_MAX_BYTES = 64 << 20
 
-#: Parquet at rest is encoded + compressed; its in-memory row footprint
-#: is typically 3-4x the file bytes. Any estimate derived from an
-#: at-rest directory size must be INFLATED by this factor before it is
-#: compared against BROADCAST_MAX_BYTES — comparing raw file bytes would
-#: let a 64 MiB footprint (~256 MiB in memory) force a broadcast the
-#: observed-row-count path would refuse.
-PARQUET_INFLATION = 4
-
 #: Per-row estimate for a name-dimension row (a few short strings plus
 #: row overhead) used to turn observed row counts into bytes.
 EST_ROW_BYTES = 128
-
-
-def dir_bytes(path: str) -> int:
-    """At-rest footprint of a committed table (driver metadata only)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            try:
-                total += os.path.getsize(os.path.join(root, name))
-            except OSError:
-                pass
-    return total
 
 
 def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:

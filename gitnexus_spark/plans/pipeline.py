@@ -10,14 +10,16 @@ Differences by design (Spark-first, not a port):
 - passes 1 and 2 are FUSED into one corpus scan (extract_corpus): the raw
   html column is read once and never shuffled — at 100 TB the input scan
   is the only stage touching it (VERDICT r01 what's-wrong #3 fixed).
-- every pass CHECKPOINTS its output as a partitioned parquet table
-  (Iceberg in production — same layout, snapshot-tagged; see TableWriter
-  seam); a re-run skips passes whose _SUCCESS marker exists → resumable
-  mid-run (north star).
-- lineage/counters ride on the write itself via df.observe() — NO separate
+- every pass CHECKPOINTS its output as a snapshot table
+  (sources/snapshots.py — the Iceberg stand-in: snapshot per commit,
+  manifest, time travel); a re-run skips passes whose table has a
+  snapshot → resumable mid-run (north star).
+- lineage/counters ride on the write itself: the snapshot commit
+  observes its row count (df.observe) into the manifest — NO separate
   count() job per pass (VERDICT r01 next-round #4) — the distributed
   replacement for the reference's console statistics
-  (call-processor.ts:43-56).
+  (call-processor.ts:43-56). A resumed pass reads the same count back
+  from the manifest.
 - ids are deterministic content hashes, so re-runs are idempotent.
 
 Final graph model (reference kuzu.service.ts:74-164, one table per
@@ -35,7 +37,7 @@ import os
 import time
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ids import edge_id, node_id
@@ -47,13 +49,17 @@ from ..operators.linking import (TOP_PER_NAME, entity_registry,
                                  site_fuzzy_map, stage_columns,
                                  with_fuzzy_top1)
 from ..operators.structure import structure_graph
-from .hints import (EST_ROW_BYTES, BROADCAST_MAX_BYTES, PARQUET_INFLATION,
-                    broadcast_if_small, dir_bytes)
+from ..sources.snapshots import SnapshotWriter
+from .hints import EST_ROW_BYTES, BROADCAST_MAX_BYTES, broadcast_if_small
 
 
 def _table(out_dir: str, name: str) -> str:
     return os.path.join(out_dir, name)
 
+
+#: ``extracted`` is partitioned by item, so every pass-3/4 projection of
+#: it (pages text, mentions, triples, links) is a pruned read
+EXTRACTED_PARTITION_BY = ["item"]
 
 EMPTY_SITE_DDL = ("doc_url string, name string, c_fuzzy string,"
                   " fuzzy_score double")
@@ -146,60 +152,26 @@ def resolve_triples(raw_triples: DataFrame, name_map: DataFrame,
     )
 
 
-def _done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-class ParquetWriter:
-    """Table-format seam. Parquet directories with _SUCCESS markers here;
-    the production implementation is an Iceberg catalog writer (same
-    interface: write/read/exists) whose snapshots give time-travel,
-    snapshot tags per pass, and MERGE INTO re-ingest. The Iceberg runtime
-    jar is not available in this sandbox (no network), so the seam keeps
-    the pipeline logic format-agnostic — see README 'Table format'."""
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-
-    def write(self, df: DataFrame, path: str,
-              partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-
-    def read(self, path: str, schema=None) -> DataFrame:
-        """``schema`` (when the caller just wrote the table and knows it)
-        skips the footer-inference job the schemaless read runs — one
-        fewer driver-latency job per committed pass (guide §1.2: the
-        pipeline wall is a chain of small jobs, so per-job cost is the
-        scaling term). Resume reads pass no schema and infer as before."""
-        r = self.spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(path)
-
-    def exists(self, path: str) -> bool:
-        return _done(path)
-
-
 class KGPipeline:
     """Resumable four-pass pipeline over a pages corpus.
 
     Input partitioning is the caller's concern: at cluster scale the
     source table's own splits dominate; for a single small local file,
     repartition BEFORE calling run() (synthetic.synth_pages already does).
+
+    Every table lands under ``out_dir`` as a snapshot table, committed
+    through ``writer`` (a fresh ``SnapshotWriter`` when omitted).
     """
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  alias_dict: DataFrame | None = None,
-                 writer: ParquetWriter | None = None,
+                 writer: SnapshotWriter | None = None,
                  broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
                  optimize_layout: bool = False) -> None:
         self.spark = spark
         self.out_dir = out_dir
         self.alias_dict = alias_dict
-        self.writer = writer or ParquetWriter(spark)
+        self.writer = writer or SnapshotWriter(spark)
         self.broadcast_max_bytes = broadcast_max_bytes
         self.optimize_layout = optimize_layout
         self._lineage_rows: list[tuple] = []
@@ -213,11 +185,10 @@ class KGPipeline:
                partition_by: list[str] | None = None) -> DataFrame:
         path = _table(self.out_dir, name)
         t0 = time.time()
-        # row counter observed ON the write job itself — zero extra jobs
-        obs = Observation()
-        self.writer.write(df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                          path, partition_by)
-        rows = int(obs.get.get("rows", -1))
+        # the commit observes its row count on the write job itself —
+        # zero extra jobs; the manifest entry carries it
+        snap = self.writer.write(df, path, partition_by)
+        rows = self.writer.rows(path, snap)
         self._rows[name] = rows
         self._lineage_rows.append((name, path, rows, round(time.time() - t0, 3)))
         # read back with the schema we just wrote (partition columns move
@@ -227,12 +198,14 @@ class KGPipeline:
         read_schema = StructType(
             [f for f in df.schema.fields if f.name not in pby]
             + [f for f in df.schema.fields if f.name in pby])
-        return self.writer.read(path, schema=read_schema)
+        return self.writer.read(path, snap, schema=read_schema)
 
     def _load_or(self, name: str, builder, partition_by=None) -> DataFrame:
         path = _table(self.out_dir, name)
         if not self._rederive and self.writer.exists(path):  # resume
-            self._rows.setdefault(name, -1)
+            # the count observed when the snapshot was committed; the
+            # lineage row keeps -1 = "resumed, not recomputed"
+            self._rows[name] = self.writer.rows(path)
             self._lineage_rows.append((name, path, -1, 0.0))
             return self.writer.read(path)
         # label every job of this commit (guide §1.5); thread-local, so
@@ -247,25 +220,17 @@ class KGPipeline:
     def _dim_hint(self, df: DataFrame, *dims: str,
                   row_factor: int = 1) -> DataFrame:
         """Broadcast a dimension-derived frame only when the OBSERVED
-        sizes of the committed tables it derives from say it fits
+        row counts of the committed tables it derives from say it fits
         (VERDICT r03 #1 — the vocabulary is a measurement, not an
-        assumption). Unknown counts (resume) fall back to the committed
-        parquet footprint INFLATED by the at-rest compression factor —
-        file bytes understate the in-memory row size ~3-4x, so comparing
-        them raw against the gate would force broadcasts the row-count
-        path refuses; over the gate the join is left unhinted and
-        Catalyst/AQE plans a name-keyed shuffle join instead.
+        assumption). A written pass observed its count on the commit; a
+        resumed one read it from the snapshot manifest, so every dim has
+        one. Over the gate the join is left unhinted and Catalyst/AQE
+        plans a name-keyed shuffle join instead.
         row_factor: multiplier when df fans out per dimension row (e.g.
         the capped fuzzy-candidate lists)."""
-        est = 0
-        for name in dims:
-            rows = self._rows.get(name, -1)
-            if rows >= 0:
-                est += rows * EST_ROW_BYTES * row_factor
-            else:
-                est += (dir_bytes(_table(self.out_dir, name))
-                        * PARQUET_INFLATION * row_factor)
-        return broadcast_if_small(df, est, self.broadcast_max_bytes)
+        est = sum(self._rows[name] for name in dims) * EST_ROW_BYTES
+        return broadcast_if_small(df, est * row_factor,
+                                  self.broadcast_max_bytes)
 
     def lineage(self) -> DataFrame:
         return self.spark.createDataFrame(
@@ -290,28 +255,27 @@ class KGPipeline:
         - ``edges_zorder``: the edge table rewritten along the (src, dst)
           Morton curve, so a two-sided or either-sided endpoint lookup
           prunes files by the native string min/max stats instead of
-          scanning every file of a type partition (in production this is
-          Iceberg OPTIMIZE ZORDER on the same table; here it lands as a
-          sibling directory because plain parquet can't swap layouts
-          transactionally).
+          scanning every file of a type partition. A snapshot table
+          like every pass, so it time-travels in step with ``edges``
+          (in production this is Iceberg OPTIMIZE ZORDER on the edge
+          table itself).
         - ``search_index``: the trigram posting lists over the node
           search fields (operators/search_index.py), the at-rest
           analogue of the reference's in-memory search over node names
-          (query-engine.ts searchNodes).
+          (query-engine.ts searchNodes). An index directory, not a
+          table: its metadata file marks it complete.
         """
         from ..operators.search_index import build_search_index
-        from ..operators.zorder import write_zordered
+        from ..operators.zorder import zordered
 
-        zpath = _table(self.out_dir, "edges_zorder")
-        if _done(zpath) == self._rederive:
-            t0 = time.time()
-            n_files = max(8, edges.rdd.getNumPartitions())
-            write_zordered(edges, ["src", "dst"], zpath, num_files=n_files)
-            self._lineage_rows.append(
-                ("edges_zorder", zpath, self._rows.get("edges", -1),
-                 round(time.time() - t0, 3)))
+        if not self._rederive or self.writer.exists(
+                _table(self.out_dir, "edges_zorder")):
+            self._load_or("edges_zorder", lambda: zordered(
+                edges, ["src", "dst"],
+                num_files=max(8, edges.rdd.getNumPartitions())))
         ipath = _table(self.out_dir, "search_index")
-        if _done(ipath) == self._rederive:
+        if os.path.exists(os.path.join(ipath, "_index_meta.json")) \
+                == self._rederive:
             t0 = time.time()
             build_search_index(nodes, ipath)
             self._lineage_rows.append(
@@ -320,12 +284,11 @@ class KGPipeline:
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
         # pass 1+2 fused: ONE corpus scan emits page text (+content hash),
         # mentions, triples (with same-doc definition flags), and links.
-        # Partitioned by item -> every projection below is a pruned read.
         def p12():
             return ex.extract_corpus(pages.select("url", "warc_ts", "html", "lang"),
                                      carry_cols=["warc_ts", "lang"])
         out = self._passes_3_4(
-            self._load_or("extracted", p12, partition_by=["item"]))
+            self._load_or("extracted", p12, EXTRACTED_PARTITION_BY))
         if self.optimize_layout:
             self._optimize_layout(out["nodes"], out["edges"])
         return out

@@ -4,7 +4,8 @@ src/core/graph/trie.ts:228-254 — re-adding a file drops its previous
 definitions and adds it again, so the registry stays consistent).
 
 ``refresh_from_batch`` applies a batch of re-crawled (or new) pages to
-a KG built with ``KGPipeline(..., writer=SnapshotWriter)`` in two steps:
+a warehouse built by ``KGPipeline`` (or an empty ``out_dir``: the batch
+then starts the corpus) in two steps:
 
 - passes 1-2, batch only: the batch is extracted once (the latest fetch
   per url wins) and replaces those urls' rows of ``extracted``.
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..operators import extract as ex
 from ..sources.snapshots import SnapshotWriter
-from .pipeline import KGPipeline
+from .pipeline import EXTRACTED_PARTITION_BY, KGPipeline
 
 
 def _latest_per_url(pages: DataFrame) -> DataFrame:
@@ -65,8 +66,8 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
     """Apply a re-crawl batch: replace its urls in ``extracted``, then
     re-derive passes 3-4.
 
-    Tables under ``out_dir`` must have been written by
-    ``KGPipeline(..., writer=SnapshotWriter(spark))``. Returns
+    ``out_dir`` is a ``KGPipeline`` warehouse, or empty (the batch is
+    then the whole corpus and the refresh builds the KG). Returns
     ``docs`` (distinct urls in the batch), ``affected_names`` (names the
     batch's old or new rows mention or state) and ``docs_reresolved``
     (every document of the re-derived ``triples_resolved``: passes 3-4
@@ -76,17 +77,21 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
     path = os.path.join(out_dir, "extracted")
     latest = _latest_per_url(pages_batch)
     urls = latest.select("url")
-    old_rows = w.read(path).join(urls, "url", "left_semi")  # pre-batch
     # pinned: replace_into plans its source twice (key set + new rows),
     # and extraction is the one stage that must run once
     new_rows = ex.extract_corpus(
         latest.select("url", "warc_ts", "html", "lang"),
         carry_cols=["warc_ts", "lang"]).localCheckpoint()
-    w.replace_into(path, new_rows, ["url"])
+    affected = _names_of(new_rows)
+    if w.exists(path):
+        old_rows = w.read(path).join(urls, "url", "left_semi")  # pre-batch
+        affected = affected.unionByName(_names_of(old_rows))
+        w.replace_into(path, new_rows, ["url"])
+    else:  # an empty warehouse: the batch starts the corpus
+        w.write(new_rows, path, EXTRACTED_PARTITION_BY, op="replace")
     out = KGPipeline(spark, out_dir, alias_dict=alias_dict,
                      writer=w)._rederive_from(w.read(path))
 
-    affected = _names_of(old_rows).unionByName(_names_of(new_rows))
     return {
         "docs": urls.count(),
         "affected_names": affected.distinct().count(),

@@ -26,9 +26,10 @@ data — at 10^12 rows the data path is still pure executor-parallel
 parquet IO; only the commit record goes through the driver, exactly as
 an Iceberg catalog commit does.
 
-Interface-compatible with plans.pipeline.ParquetWriter (write/read/
-exists), so `KGPipeline(..., writer=SnapshotWriter(spark))` upgrades
-every pass checkpoint to a snapshot with history.
+This is the one table format of the KG pipeline: every table
+`plans.pipeline.KGPipeline` commits is a snapshot table, so every pass
+checkpoint has history, its resume gate reads the manifest, and a
+refresh advances it by one snapshot.
 """
 
 from __future__ import annotations
@@ -118,7 +119,7 @@ def merge_frames(target: DataFrame, source: DataFrame,
 
 
 class SnapshotWriter:
-    """Snapshot-at-rest table writer (drop-in for ParquetWriter)."""
+    """Snapshot-at-rest table writer: write/read/exists plus history."""
 
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
@@ -334,14 +335,19 @@ class SnapshotWriter:
     def read(self, path: str, snapshot_id: int | None = None,
              tag: str | None = None,
              as_of_ts: float | None = None, schema=None) -> DataFrame:
-        """``schema`` (writer-seam contract, same as ParquetWriter.read):
-        a caller that just wrote the table may supply the known schema to
-        skip the footer-inference job."""
+        """``schema``: a caller that just wrote the table may supply the
+        known schema to skip the footer-inference job (one fewer
+        driver-latency job per committed pipeline pass)."""
         e = self._resolve(path, snapshot_id, tag, as_of_ts)
         r = self.spark.read
         if schema is not None:
             r = r.schema(schema)
         return r.parquet(os.path.join(path, e["dir"]))
+
+    def rows(self, path: str, snapshot_id: int | None = None) -> int:
+        """Row count observed on the write that committed the snapshot
+        (the current one by default) — manifest metadata, no job."""
+        return self._resolve(path, snapshot_id)["rows"]
 
     def exists(self, path: str) -> bool:
         try:

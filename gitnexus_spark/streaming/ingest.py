@@ -1,20 +1,15 @@
-"""Streaming ingest: incremental crawl batches -> extraction -> sink.
+"""Streaming ingest: incremental crawl batches -> the at-rest KG.
 
 The reference is batch-only; its incremental pieces are a chunked
 line-streaming reader (streaming-processor.ts:63-168) and per-file
 re-ingest (trie.ts:228-254). The Spark-native equivalent: a file-source
-Structured Stream over arriving page batches with
-
-- event-time = warc_ts, watermarked for late crawls;
-- exactly-once page-level semantics via dropDuplicates on url within
-  the watermark (late duplicate fetches collapse);
-- foreachBatch running the SAME batch extraction operators per
-  micro-batch (single code path for batch + streaming), appending to
-  the extracted table — the incremental analogue of per-pass
-  checkpointing;
-- re-crawl batches that keep an at-rest graph current
-  (start_full_refresh_stream: every micro-batch through
-  plans.refresh.refresh_from_batch).
+Structured Stream over arriving page batches (``read_page_stream``)
+with ONE sink, ``start_full_refresh_stream``: foreachBatch hands every
+micro-batch to plans.refresh.refresh_from_batch — the SAME extraction
+operators and pass 3-4 builders as a batch build (single code path for
+batch + streaming). Within a batch the latest fetch of a url wins; the
+offset checkpoint makes a restart process only new files. Event-time
+operators ride beside it (windowed mention counts, sessionization).
 """
 
 from __future__ import annotations
@@ -36,31 +31,6 @@ def read_page_stream(spark: SparkSession, input_dir: str,
     )
 
 
-def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
-                            checkpoint_dir: str, watermark: str = "1 hour"):
-    """foreachBatch sink: each micro-batch is handed to the SAME batch
-    extraction operator (extract_all) and appended to the extracted table
-    — one code path for batch and streaming. Restart resumes from the
-    streaming checkpoint (offset log), complementing the batch pipeline's
-    per-pass parquet checkpoints."""
-    deduped = (
-        pages_stream
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["url"])
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        extract_all(batch_df).write.mode("append").parquet(out_dir)
-
-    return (
-        deduped.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_full_refresh_stream(pages_stream: DataFrame, kg_out_dir: str,
                               checkpoint_dir: str,
                               alias_dict: DataFrame | None = None):
@@ -73,7 +43,8 @@ def start_full_refresh_stream(pages_stream: DataFrame, kg_out_dir: str,
     the streaming analogue of trie.ts:228-254. Urls are not deduped
     across batches: a later fetch of a known url is a re-crawl; within a
     batch the latest warc_ts wins. Every table advances one snapshot per
-    batch (crawl history = snapshot history); restart resumes from the
+    batch (crawl history = snapshot history), and the first batch into
+    an empty ``kg_out_dir`` builds the KG; restart resumes from the
     stream checkpoint, and a replayed batch re-derives the same graph.
     Extraction is batch-sized; passes 3-4 cost O(corpus) per batch (see
     refresh_from_batch's cost notes)."""

@@ -59,10 +59,12 @@ def main() -> None:
     from gitnexus_spark.operators.graph_queries import (guarded_sql,
                                                         register_views)
     from gitnexus_spark.session import get_spark
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
 
     spark = get_spark(app_name="gitnexus-query", master=args.master)
-    nodes = spark.read.parquet(os.path.join(args.warehouse, "nodes"))
-    edges = spark.read.parquet(os.path.join(args.warehouse, "edges"))
+    w = SnapshotWriter(spark)   # current snapshot of each table
+    nodes = w.read(os.path.join(args.warehouse, "nodes"))
+    edges = w.read(os.path.join(args.warehouse, "edges"))
     register_views(nodes, edges)
     def build():
         if args.cypher:

@@ -11,9 +11,9 @@ Local smoke:
     python jobs/run_pipeline.py --input synthetic:/root/testdata/sf0.001 \
         --output /tmp/kg_job
 
-The job is idempotent and resumable: re-submitting with the same --output
-skips committed passes (parquet _SUCCESS gates; Iceberg snapshots in
-production).
+Every pass commits a snapshot table (sources/snapshots.py; Iceberg in
+production). The job is idempotent and resumable: re-submitting with
+the same --output skips every pass whose table has a snapshot.
 """
 
 from __future__ import annotations
@@ -37,11 +37,6 @@ def main() -> None:
     ap.add_argument("--rep", type=int, default=1,
                     help="synthetic corpus replication factor")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--table-format", choices=["parquet", "snapshot"],
-                    default="parquet",
-                    help="'snapshot' commits every pass through the "
-                         "snapshot-at-rest layer (history/time travel; "
-                         "sources/snapshots.py) instead of bare parquet")
     ap.add_argument("--optimize-layout", action="store_true",
                     help="also write the (src,dst) z-ordered edge layout "
                          "and the trigram search index (nightly-OPTIMIZE "
@@ -66,12 +61,7 @@ def main() -> None:
         pages = spark.read.parquet(args.input)
         alias = spark.read.parquet(args.alias_dict) if args.alias_dict else None
 
-    writer = None
-    if args.table_format == "snapshot":
-        from gitnexus_spark.sources.snapshots import SnapshotWriter
-
-        writer = SnapshotWriter(spark)
-    pipe = KGPipeline(spark, args.output, alias_dict=alias, writer=writer,
+    pipe = KGPipeline(spark, args.output, alias_dict=alias,
                       optimize_layout=args.optimize_layout)
     t0 = time.time()
     out = pipe.run(pages)

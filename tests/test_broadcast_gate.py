@@ -104,3 +104,25 @@ def test_pipeline_resolved_shuffle_join_when_over_gate(
         a = sorted(map(tuple, res_b[t].collect()))
         b = sorted(map(tuple, res_s[t].collect()))
         assert a == b, t
+
+
+def test_resume_gate_reads_manifest_rows(spark, sf_dir, tmp_path):
+    """A resumed pass gates on the row count its snapshot manifest
+    recorded: a fresh KGPipeline over a built warehouse hints the
+    name_links join exactly when rows x EST_ROW_BYTES fits the budget."""
+    from gitnexus_spark.plans.hints import EST_ROW_BYTES
+    from gitnexus_spark.plans.pipeline import KGPipeline
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
+    from gitnexus_spark.synthetic import synth_pages
+
+    out = str(tmp_path / "kg")
+    KGPipeline(spark, out).run(synth_pages(spark, sf_dir).limit(20))
+    rows = SnapshotWriter(spark).rows(f"{out}/name_links")
+    dim = spark.createDataFrame([("a",)], ["name"])
+    for budget, hinted in ((rows * EST_ROW_BYTES, True),
+                           (rows * EST_ROW_BYTES - 1, False)):
+        pipe = KGPipeline(spark, out, broadcast_max_bytes=budget)
+        assert pipe._rows == {}
+        pipe._load_or("name_links", None)   # resumed: no builder runs
+        assert pipe._rows["name_links"] == rows > 0
+        assert (pipe._dim_hint(dim, "name_links") is not dim) == hinted

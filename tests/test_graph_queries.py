@@ -352,6 +352,8 @@ def test_query_cli_over_warehouse(spark, tmp_path):
     import subprocess
     import sys
 
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
+
     nodes = spark.createDataFrame(
         [("n1", "Page", "p1"), ("n2", "Entity", "Acme"),
          ("n3", "Entity", "Zorg")], "id string, label string, name string")
@@ -359,8 +361,11 @@ def test_query_cli_over_warehouse(spark, tmp_path):
         [("e1", "MENTIONS", "n1", "n2"), ("e2", "MENTIONS", "n1", "n3")],
         "id string, type string, src string, dst string")
     wh = str(tmp_path / "wh")
-    nodes.write.parquet(os.path.join(wh, "nodes"))
-    edges.write.parquet(os.path.join(wh, "edges"))
+    w = SnapshotWriter(spark)
+    # two snapshots of nodes: the queries must read the current one
+    w.write(nodes.limit(1), os.path.join(wh, "nodes"))
+    w.write(nodes, os.path.join(wh, "nodes"))
+    w.write(edges, os.path.join(wh, "edges"))
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {**os.environ, "PYTHONPATH": repo}

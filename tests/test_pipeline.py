@@ -156,21 +156,23 @@ def test_optimize_layout_artifacts(spark, pipeline_out):
                                                         search_nodes)
     from gitnexus_spark.operators.search_index import search_with_index
     from gitnexus_spark.plans.pipeline import KGPipeline
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
     from gitnexus_spark.synthetic import alias_dictionary
 
     out, out_dir, pages = pipeline_out
+    w = SnapshotWriter(spark)
     pipe = KGPipeline(spark, out_dir, alias_dict=alias_dictionary(spark),
-                      optimize_layout=True)
+                      writer=w, optimize_layout=True)
     out2 = pipe.run(pages)  # resume: passes no-op, layout artifacts build
 
     zp = os.path.join(out_dir, "edges_zorder")
     ip = os.path.join(out_dir, "search_index")
-    assert os.path.exists(os.path.join(zp, "_SUCCESS"))
+    assert w.exists(zp)
     assert os.path.exists(os.path.join(ip, "_index_meta.json"))
 
     # same edge set, different layout
     cols = ["id", "type", "src", "dst"]
-    ez = spark.read.parquet(zp).select(cols)
+    ez = w.read(zp).select(cols)
     assert ez.exceptAll(out["edges"].select(cols)).count() == 0
     assert out["edges"].select(cols).exceptAll(ez).count() == 0
 

@@ -206,6 +206,48 @@ def test_inbound_links_to_new_url_are_back_filled(spark, sf_dir, base,
         == _node_set(full["nodes"])
 
 
+def test_refresh_of_a_default_build(spark, base, tmp_path):
+    """A warehouse built by the default ``KGPipeline(spark, out)`` (no
+    writer passed) takes a refresh."""
+    from gitnexus_spark.plans.pipeline import integrity_checks
+    from gitnexus_spark.plans.refresh import refresh_from_batch
+    from gitnexus_spark.synthetic import alias_dictionary
+
+    out = str(tmp_path / "kg")
+    _pipeline_tables(spark, out, base["pages"])
+    batch = _recrawl_row(spark, base["row"], "Entity_Zz9 founded Entity_20.")
+    refresh_from_batch(spark, out, batch, alias_dict=alias_dictionary(spark))
+
+    w = base["w"]
+    nodes, edges = (w.read(f"{out}/{t}") for t in ("nodes", "edges"))
+    assert nodes.filter(F.col("name") == "Entity_Zz9").count() == 1
+    ic = integrity_checks(nodes, edges)
+    assert ic == {k: 0 for k in ic}
+    assert len(w.history(f"{out}/edges")) == 2
+
+
+def test_refresh_into_an_empty_dir_builds_the_kg(spark, base, tmp_path):
+    """A batch refreshed into an empty out_dir is the whole corpus: the
+    graph equals ``KGPipeline.run`` over the same pages."""
+    from gitnexus_spark.plans.refresh import refresh_from_batch
+    from gitnexus_spark.synthetic import alias_dictionary
+
+    batch = base["pages"].filter(
+        F.regexp_extract("url", r"p(\d+)\.html$", 1).cast("int") < 8
+    ).localCheckpoint()
+    out, w = str(tmp_path / "kg"), base["w"]
+    stats = refresh_from_batch(spark, out, batch,
+                               alias_dict=alias_dictionary(spark))
+    assert stats["docs"] == 8
+
+    full = _pipeline_tables(spark, str(tmp_path / "rebuild"), batch)
+    for t, rows in (("nodes", _node_set), ("edges", _edge_set),
+                    ("triples_resolved", _resolved_set)):
+        assert rows(w.read(f"{out}/{t}")) == rows(full[t]), t
+    # extracted keeps the pipeline's item partitioning
+    assert w.history(f"{out}/extracted")[-1]["partition_by"] == ["item"]
+
+
 def _ids(spark, label, values):
     from gitnexus_spark.functions.ids import node_id
 

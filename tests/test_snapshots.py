@@ -140,7 +140,7 @@ def test_concurrent_commits_no_lost_snapshot(spark, writer, tmp_path):
 
 def test_pipeline_with_snapshot_writer(spark, sf_dir, tmp_path):
     """Every pass checkpoint becomes snapshot history; a re-run resumes
-    from the committed snapshots (same contract as the parquet seam)."""
+    from the committed snapshots and adds none."""
     from gitnexus_spark.plans.pipeline import KGPipeline
     from gitnexus_spark.sources.snapshots import SnapshotWriter
     from gitnexus_spark.synthetic import alias_dictionary, synth_pages

@@ -21,10 +21,14 @@ def _write_batch(spark, in_dir, rows):
 
 
 def test_stream_extraction_end_to_end(spark, stream_dirs):
+    """The refresh stream over an EMPTY warehouse: the first micro-batch
+    builds the KG, a duplicate url within it is extracted once, and a
+    restart from the checkpoint processes only the new file."""
     import datetime as dt
 
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
     from gitnexus_spark.streaming.ingest import (read_page_stream,
-                                                 start_extraction_stream)
+                                                 start_full_refresh_stream)
 
     ts = dt.datetime(2024, 1, 1)
     _write_batch(spark, stream_dirs["in"], [
@@ -34,26 +38,29 @@ def test_stream_extraction_end_to_end(spark, stream_dirs):
     ])
     stream = read_page_stream(spark, stream_dirs["in"])
     assert stream.isStreaming
-    q = start_extraction_stream(stream, stream_dirs["out"], stream_dirs["ckpt"])
-    q.awaitTermination(120)
+    q = start_full_refresh_stream(stream, stream_dirs["out"],
+                                  stream_dirs["ckpt"])
+    q.awaitTermination(300)
 
-    out = spark.read.parquet(stream_dirs["out"])
-    triples = out.filter("item = 'triple'")
+    w = SnapshotWriter(spark)
+    tbl = f"{stream_dirs['out']}/extracted"
+    triples = w.read(tbl).filter("item = 'triple'")
     got = {(r["name"], r["pred"], r["obj"]) for r in triples.collect()}
     assert got == {("Acme", "founded", "Zorg"), ("Beta", "visited", "Acme")}
-    # duplicate url collapsed within watermark (exactly-once page semantics)
-    assert out.filter("item = 'triple'").count() == 2
+    # duplicate url collapsed within the batch (exactly-once page semantics)
+    assert triples.count() == 2
 
     # resume from checkpoint: second batch only processes new files
     _write_batch(spark, stream_dirs["in"], [
         ("u3", ts, b"<p>Gamma acquired Beta.</p>", "Gamma acquired Beta.", "en"),
     ])
-    q2 = start_extraction_stream(
+    q2 = start_full_refresh_stream(
         read_page_stream(spark, stream_dirs["in"]),
         stream_dirs["out"], stream_dirs["ckpt"])
-    q2.awaitTermination(120)
-    out2 = spark.read.parquet(stream_dirs["out"])
-    assert out2.filter("item = 'triple'").count() == 3
+    q2.awaitTermination(300)
+    # resumed from the offset log: batch 0 is not replayed
+    assert [p["batchId"] for p in q2.recentProgress] == [1]
+    assert w.read(tbl).filter("item = 'triple'").count() == 3
 
 
 def test_incremental_reingest_replaces_recrawled_urls(spark, stream_dirs):

@@ -32,7 +32,8 @@ def test_pyfiles_zip_deterministic(tmp_path):
 
 
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
-def test_spark_submit_pyfiles_end_to_end(tmp_path, sf_dir):
+def test_spark_submit_pyfiles_end_to_end(spark, tmp_path, sf_dir):
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
     from tools.make_pyfiles_zip import build
 
     zip_path = build(str(tmp_path / "gitnexus_spark.zip"))
@@ -55,4 +56,4 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path, sf_dir):
     res = json.loads(line)
     assert res["docs"] > 0 and res["triples"] > 0
     assert all(v == 0 for v in res["integrity"].values())
-    assert os.path.exists(out_dir / "nodes" / "_SUCCESS")
+    assert SnapshotWriter(spark).exists(str(out_dir / "nodes"))

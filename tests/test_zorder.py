@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gitnexus_spark.operators.zorder import with_zorder, write_zordered
+from gitnexus_spark.operators.zorder import with_zorder, zordered
 
 
 @pytest.fixture(scope="module")
@@ -31,7 +31,7 @@ def _file_spans(spark, path):
 
 def test_files_cover_small_rectangles(spark, xy, tmp_path):
     path = str(tmp_path / "z")
-    write_zordered(xy, ["x", "y"], path, num_files=16)
+    zordered(xy, ["x", "y"], num_files=16).write.parquet(path)
 
     back = spark.read.parquet(path)
     assert back.count() == 40000
@@ -62,7 +62,7 @@ def test_y_band_pruning_beats_x_sorted(spark, xy, tmp_path):
     stats) far fewer z-ordered files than x-sorted files — where it
     touches ALL of them — and box filters must prune on average."""
     zp = str(tmp_path / "z2")
-    write_zordered(xy, ["x", "y"], zp, num_files=16)
+    zordered(xy, ["x", "y"], num_files=16).write.parquet(zp)
     xp = str(tmp_path / "xsorted")
     xy.repartitionByRange(16, F.col("x")).sortWithinPartitions("x") \
         .write.mode("overwrite").parquet(xp)
@@ -91,7 +91,7 @@ def test_string_columns_cluster_native_stats(spark, tmp_path):
         F.md5((F.col("id") % 200).cast("string")).alias("src"),
         F.md5(F.floor(F.col("id") / 200).cast("string")).alias("dst"))
     path = str(tmp_path / "zs")
-    write_zordered(df, ["src", "dst"], path, num_files=16)
+    zordered(df, ["src", "dst"], num_files=16).write.parquet(path)
     stats = []
     for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
         stats.append(spark.read.parquet(f).agg(
