@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import hints
+
 
 DRIVER_CC_MAX_EDGES = 500_000
 
@@ -43,6 +45,10 @@ def connected_components(
     small jobs regardless of data size). Above the threshold the
     distributed large-star/small-star loop takes over — identical
     results, O(log n) rounds.
+
+    ``stats`` (optional dict) receives ``vertices`` on the driver path
+    (the output's row count, known without a job) and ``rounds`` /
+    ``converged`` on the distributed one.
     """
     # The count gate and the follow-up action (collect / first star
     # round) would each execute the edge plan; pin it across the two
@@ -56,11 +62,9 @@ def connected_components(
         e = e.persist()
     try:
         n_edges = e.count()
-        if n_edges == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "vertex string, component string")
         if n_edges <= driver_threshold:
-            return _union_find_rows(edges.sparkSession, e.collect())
+            return _union_find_rows(edges.sparkSession,
+                                    e.collect() if n_edges else [], stats)
         # _large_small_star eagerly checkpoints its input on entry, so
         # the pin is releasable as soon as it returns
         return _large_small_star(e, src, dst, max_iter, stats)
@@ -69,7 +73,7 @@ def connected_components(
             e.unpersist()
 
 
-def _union_find_rows(spark, rows) -> DataFrame:
+def _union_find_rows(spark, rows, stats: dict | None = None) -> DataFrame:
     """Classic path-compressed union-find on collected (src, dst) rows;
     component = min member (same contract as the distributed path)."""
     parent: dict[str, str] = {}
@@ -93,6 +97,8 @@ def _union_find_rows(spark, rows) -> DataFrame:
             parent[hi] = lo
 
     out = [(v, find(v)) for v in parent]
+    if stats is not None:
+        stats["vertices"] = len(out)
     return spark.createDataFrame(out, "vertex string, component string")
 
 
@@ -225,13 +231,24 @@ def canonical_entities(
     registry: DataFrame,
     linked: DataFrame | None = None,
     alias_dict: DataFrame | None = None,
+    broadcast_max_bytes: int = hints.BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """(name, canonical) for every known surface form; canonical = min name
     of the coreference component (deterministic total-order representative,
     replacing the reference's array-order pick, call-processor.ts:228,259).
+
+    The driver path's component map is a driver-built frame with no
+    statistics, so Catalyst would sort-merge-join it and shuffle both
+    sides; it is broadcast instead when the vertex count the driver
+    holds fits ``broadcast_max_bytes`` (plans.hints). The distributed
+    path's map stays unhinted.
     """
     edges = coreference_edges(registry, linked, alias_dict)
-    comp = connected_components(edges)
+    stats: dict = {}
+    comp = connected_components(edges, stats=stats)
+    comp = hints.broadcast_if_small(
+        comp, stats.get("vertices", -1) * hints.EST_ROW_BYTES,
+        broadcast_max_bytes)
     all_names = registry.select("name")
     if linked is not None:
         all_names = all_names.unionByName(linked.select("name"))

@@ -209,17 +209,17 @@ def pages_text(corpus: DataFrame, carry_cols: list[str] | None = None) -> DataFr
 
 def mentions(extracted: DataFrame, min_len: int = 2,
              stop_entities: list[str] | None = None) -> DataFrame:
-    """Filtered mention projection: noise + stop-entity anti-join.
+    """Filtered mention projection: noise + stop-entity filter.
 
-    (url, name, start, end) — the web analogue of definition rows.
+    (url, name, start, end) — the web analogue of definition rows. The
+    stop list is a literal IN predicate: a join against a driver-built
+    frame would cost a broadcast job in every plan that reads mentions.
     """
     stops = stop_entities if stop_entities is not None else STOP_ENTITIES
-    spark = extracted.sparkSession
-    stop_df = spark.createDataFrame([(s,) for s in stops], ["name"])
     return (
         extracted.filter(F.col("item") == "mention")
         .filter(F.length("name") >= min_len)
-        .join(F.broadcast(stop_df), "name", "left_anti")
+        .filter(~F.col("name").isin(list(stops)))
         .select("url", "name", "start", "end")
     )
 

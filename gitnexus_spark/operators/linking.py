@@ -33,7 +33,10 @@ One linking path: KGPipeline, the driver's light pipeline and
 ``link_mentions`` all compose the same pieces —
 ``exact_resolution_map`` -> ``missed_candidates`` -> ``with_fuzzy_top1``
 (``name_resolution_map`` is that composition) and ``stage_columns`` for
-precedence; they differ only in what they persist.
+precedence; they differ only in what they persist. Whether fuzzy has any
+work is observed, not probed: the exact map's checkpoint job counts the
+names both exact stages missed, and no gram join is planned when that
+count is zero.
 
 Scale shape: everything name-keyed (alias, global exact, fuzzy) runs on
 the DISTINCT-NAME dimension (vocabulary-scale) and joins back onto the
@@ -52,7 +55,7 @@ deduped to one row per name before joining.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.ids import node_id
@@ -98,14 +101,6 @@ def exact_missed() -> Column:
     """Fuzzy eligibility over a name map: both exact stages (alias,
     global exact) missed — the reference's stage ordering."""
     return F.col("c_alias").isNull() & F.col("c_exact").isNull()
-
-
-def fuzzy_probe(name_map: DataFrame) -> DataFrame | None:
-    """(name) of the map rows fuzzy may link, or None when there are
-    none: an empty fuzzy plan still costs several fixed shuffle rounds,
-    so callers skip it whole."""
-    names = name_map.filter(exact_missed()).select("name")
-    return None if names.isEmpty() else names
 
 
 def _top(df: DataFrame, n: int, keys: list[str], *order: Column) -> DataFrame:
@@ -207,9 +202,11 @@ def exact_resolution_map(
     names: DataFrame,
     registry: DataFrame,
     alias_dict: DataFrame | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Stages 1+2b only: (name, c_alias, c_exact), checkpointed (it
-    anchors both the fuzzy probe set and the final map)."""
+    anchors both the fuzzy probe set and the final map), and the number
+    of its names both stages missed — observed on the checkpoint job
+    itself, so knowing whether fuzzy has work costs no job."""
     n = names.select("name").dropDuplicates(["name"])
     if alias_dict is not None:
         ad = alias_dict.select(F.col("alias").alias("_alias"),
@@ -221,19 +218,23 @@ def exact_resolution_map(
 
     reg_names = registry.select(F.col("name").alias("c_exact")) \
                         .dropDuplicates(["c_exact"])
-    return m.join(reg_names, m.name == F.col("c_exact"), "left") \
-            .select("name", "c_alias", "c_exact").localCheckpoint()
+    obs = Observation()
+    m = m.join(reg_names, m.name == F.col("c_exact"), "left") \
+         .select("name", "c_alias", "c_exact") \
+         .observe(obs, F.count_if(exact_missed()).alias("missed")) \
+         .localCheckpoint()
+    return m, obs.get["missed"]
 
 
-def missed_candidates(exact_map: DataFrame,
+def missed_candidates(exact_map: DataFrame, n_missed: int,
                       registry: DataFrame) -> DataFrame:
-    """The capped fuzzy candidates of the names an exact map left
-    unresolved — an empty table, with no gram join planned, when it left
-    none. KGPipeline commits this as its ``fuzzy_candidates`` table."""
-    names = fuzzy_probe(exact_map)
-    if names is None:
+    """The capped fuzzy candidates of the ``n_missed`` names an exact map
+    left unresolved — an empty table, with no gram join planned, when it
+    left none (an empty fuzzy plan still costs several fixed shuffle
+    rounds). KGPipeline commits this as its ``fuzzy_candidates`` table."""
+    if n_missed == 0:
         return exact_map.sparkSession.createDataFrame([], CANDS_DDL)
-    return fuzzy_candidates(names, registry)
+    return fuzzy_candidates(exact_map.filter(exact_missed()), registry)
 
 
 def with_fuzzy_top1(exact_map: DataFrame, candidates: DataFrame) -> DataFrame:
@@ -256,8 +257,8 @@ def name_resolution_map(
     composition KGPipeline commits as name_links (it additionally keeps
     the candidate table for the per-site re-rank).
     """
-    m = exact_resolution_map(names, registry, alias_dict)
-    return with_fuzzy_top1(m, missed_candidates(m, registry))
+    m, n_missed = exact_resolution_map(names, registry, alias_dict)
+    return with_fuzzy_top1(m, missed_candidates(m, n_missed, registry))
 
 
 def fuzzy_links(name_map: DataFrame) -> DataFrame:

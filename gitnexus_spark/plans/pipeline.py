@@ -33,8 +33,11 @@ partitioned by type):
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
+from functools import reduce
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -44,8 +47,8 @@ from ..functions.ids import edge_id, node_id
 from ..operators import extract as ex
 from ..operators.components import canonical_entities
 from ..operators.linking import (TOP_PER_NAME, entity_registry,
-                                 exact_resolution_map, fuzzy_links,
-                                 fuzzy_probe, missed_candidates,
+                                 exact_missed, exact_resolution_map,
+                                 fuzzy_links, missed_candidates,
                                  site_fuzzy_map, stage_columns,
                                  with_fuzzy_top1)
 from ..operators.structure import structure_graph
@@ -57,6 +60,27 @@ def _table(out_dir: str, name: str) -> str:
     return os.path.join(out_dir, name)
 
 
+#: where a warehouse records the broadcast gate its tables derive at
+GATE_FILE = "_pipeline.json"
+
+
+def _recorded_gate(out_dir: str) -> int:
+    """The gate the warehouse's last commit recorded, else the default."""
+    try:
+        with open(os.path.join(out_dir, GATE_FILE)) as f:
+            return json.load(f)["broadcast_max_bytes"]
+    except FileNotFoundError:
+        return BROADCAST_MAX_BYTES
+
+
+def _record_gate(out_dir: str, gate: int) -> None:
+    """Atomic replace, safe under concurrent pool-thread commits."""
+    tmp = os.path.join(out_dir, f".{GATE_FILE}.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as f:
+        json.dump({"broadcast_max_bytes": gate}, f)
+    os.replace(tmp, os.path.join(out_dir, GATE_FILE))
+
+
 #: ``extracted`` is partitioned by item, so every pass-3/4 projection of
 #: it (pages text, mentions, triples, links) is a pruned read
 EXTRACTED_PARTITION_BY = ["item"]
@@ -66,7 +90,7 @@ EMPTY_SITE_DDL = ("doc_url string, name string, c_fuzzy string,"
 
 
 def build_fuzzy_site(spark: SparkSession, raw_triples: DataFrame,
-                     name_map: DataFrame, cands: DataFrame,
+                     name_map: DataFrame, cands: DataFrame, n_cands: int,
                      dim_hint=None) -> DataFrame:
     """Pass 3a': per-call-site fuzzy resolution (reference scores fuzzy
     candidates PER CALL SITE with import distance,
@@ -74,12 +98,14 @@ def build_fuzzy_site(spark: SparkSession, raw_triples: DataFrame,
     committed fuzzy_candidates table); only the small per-name candidate
     lists are re-ranked against each site's URL locality. Sites =
     distinct (doc_url, endpoint) pairs restricted to names both exact
-    stages missed. dim_hint(df, row_factor) applies the size-gated
-    broadcast decision (identity when absent)."""
+    stages missed. ``n_cands`` is the committed candidate table's row
+    count: with no candidates there is no site row (site_fuzzy_map's
+    inner join), so no plan runs. dim_hint(df, row_factor) applies the
+    size-gated broadcast decision (identity when absent)."""
     h = dim_hint or (lambda df, row_factor=1: df)
-    unresolved = fuzzy_probe(name_map)
-    if unresolved is None:
+    if n_cands == 0:
         return spark.createDataFrame([], EMPTY_SITE_DDL)
+    unresolved = name_map.filter(exact_missed()).select("name")
     sites = (
         raw_triples.select("doc_url", F.col("subj").alias("name"))
         .unionByName(
@@ -161,18 +187,26 @@ class KGPipeline:
 
     Every table lands under ``out_dir`` as a snapshot table, committed
     through ``writer`` (a fresh ``SnapshotWriter`` when omitted).
+
+    ``broadcast_max_bytes`` is the name-dimension broadcast gate
+    (plans.hints). Each commit records it in ``out_dir/_pipeline.json``;
+    left unset, a pipeline over an existing warehouse takes the recorded
+    gate (so a resume or a refresh re-derives at the build's gate), and
+    a new one ``BROADCAST_MAX_BYTES``.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  alias_dict: DataFrame | None = None,
                  writer: SnapshotWriter | None = None,
-                 broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
+                 broadcast_max_bytes: int | None = None,
                  optimize_layout: bool = False) -> None:
         self.spark = spark
         self.out_dir = out_dir
         self.alias_dict = alias_dict
         self.writer = writer or SnapshotWriter(spark)
-        self.broadcast_max_bytes = broadcast_max_bytes
+        self.broadcast_max_bytes = (_recorded_gate(out_dir)
+                                    if broadcast_max_bytes is None
+                                    else broadcast_max_bytes)
         self.optimize_layout = optimize_layout
         self._lineage_rows: list[tuple] = []
         self._rows: dict[str, int] = {}  # observed count per committed pass
@@ -188,17 +222,11 @@ class KGPipeline:
         # the commit observes its row count on the write job itself —
         # zero extra jobs; the manifest entry carries it
         snap = self.writer.write(df, path, partition_by)
+        _record_gate(self.out_dir, self.broadcast_max_bytes)
         rows = self.writer.rows(path, snap)
         self._rows[name] = rows
         self._lineage_rows.append((name, path, rows, round(time.time() - t0, 3)))
-        # read back with the schema we just wrote (partition columns move
-        # to the tail, string-typed as the directory encoding stores them)
-        from pyspark.sql.types import StructType
-        pby = set(partition_by or [])
-        read_schema = StructType(
-            [f for f in df.schema.fields if f.name not in pby]
-            + [f for f in df.schema.fields if f.name in pby])
-        return self.writer.read(path, snap, schema=read_schema)
+        return self.writer.read(path, snap)
 
     def _load_or(self, name: str, builder, partition_by=None) -> DataFrame:
         path = _table(self.out_dir, name)
@@ -357,9 +385,9 @@ class KGPipeline:
             # booleans set during extraction. The exact map is built lazily
             # ONCE and shared by the candidates and name_links builders (on
             # resume neither builder fires, so it is never computed).
-            _m: list[DataFrame] = []
+            _m: list[tuple[DataFrame, int]] = []
 
-            def exact_map() -> DataFrame:
+            def exact_map() -> tuple[DataFrame, int]:
                 if not _m:
                     names = (
                         raw_triples.select(F.col("subj").alias("name"))
@@ -367,12 +395,11 @@ class KGPipeline:
                             raw_triples.select(F.col("obj").alias("name")))
                         .dropDuplicates(["name"])
                     )
-                    # persisted: the candidates' fuzzy_probe, the
-                    # candidates build AND the name_links build all
-                    # execute this vocabulary-scale plan — without the
-                    # pin the endpoint distinct + registry join runs 3x
+                    # (map, missed-name count); the checkpoint job
+                    # observes the count, so the candidates build knows
+                    # whether fuzzy has work without a probe job
                     _m.append(exact_resolution_map(names, registry,
-                                                   self.alias_dict).persist())
+                                                   self.alias_dict))
                 return _m[0]
 
             # The ONE gram-blocking join of a run, committed as its own
@@ -380,9 +407,9 @@ class KGPipeline:
             # per-site re-rank both derive from it without re-blocking.
             cands = self._load_or(
                 "fuzzy_candidates",
-                lambda: missed_candidates(exact_map(), registry))
+                lambda: missed_candidates(*exact_map(), registry))
             name_map = self._load_or(
-                "name_links", lambda: with_fuzzy_top1(exact_map(), cands))
+                "name_links", lambda: with_fuzzy_top1(exact_map()[0], cands))
 
             # 3a': per-call-site fuzzy resolution (VERDICT r02 #2) —
             # build_fuzzy_site re-ranks the committed candidate lists (no
@@ -395,6 +422,7 @@ class KGPipeline:
                 # typically a small vocabulary fraction)
                 return build_fuzzy_site(
                     self.spark, raw_triples, name_map, cands,
+                    self._rows["fuzzy_candidates"],
                     dim_hint=lambda df, row_factor=1: self._dim_hint(
                         df, "fuzzy_candidates"))
             # fuzzy_site and canonical_map both depend only on name_map (+
@@ -424,7 +452,7 @@ class KGPipeline:
                     registry,
                     fuzzy_links(name_map).unionByName(endpoint_names)
                                 .unionByName(used_targets),
-                    self.alias_dict)
+                    self.alias_dict, self.broadcast_max_bytes)
             canon = self._load_or("canonical_map", p3_canon)
             fuzzy_site = f_fz.result()
 
@@ -542,8 +570,6 @@ class KGPipeline:
             f_nodes = commit_bg("nodes", p4_nodes, ["label"])
             f_edges = commit_bg("edges", p4_edges, ["type"])
             nodes, edges = f_nodes.result(), f_edges.result()
-            if _m:  # release the exact-map pin (commits all landed)
-                _m[0].unpersist()
 
         return {
             "pages_text": pages_text, "extracted": corpus,
@@ -557,23 +583,25 @@ class KGPipeline:
 
 def integrity_checks(nodes: DataFrame, edges: DataFrame) -> dict[str, int]:
     """Graph well-formedness as anti-joins — all must be 0
-    (reference validateGraphIntegrity, pipeline.ts:155-251)."""
+    (reference validateGraphIntegrity, pipeline.ts:155-251). The five
+    counters are five one-row aggregates of ONE query: one SQL execution
+    instead of five count() actions."""
     ids = nodes.select("id")
-    orphan_src = edges.join(ids.withColumnRenamed("id", "src"), "src", "left_anti").count()
-    orphan_dst = edges.join(ids.withColumnRenamed("id", "dst"), "dst", "left_anti").count()
-    # isolated: no edge touches the node (U3, pipeline.ts:88-101)
     touched = edges.select(F.col("src").alias("id")) \
-                   .unionByName(edges.select(F.col("dst").alias("id"))).dropDuplicates(["id"])
-    isolated = nodes.filter(F.col("label") != "Corpus") \
-                    .join(touched, "id", "left_anti").count()
-    dup_edges = (
-        edges.groupBy("type", "src", "dst").count().filter(F.col("count") > 1).count()
-    )
-    dup_nodes = nodes.groupBy("id").count().filter(F.col("count") > 1).count()
-    return {
-        "orphan_edge_src": orphan_src,
-        "orphan_edge_dst": orphan_dst,
-        "isolated_nodes": isolated,
-        "duplicate_edges": dup_edges,
-        "duplicate_node_ids": dup_nodes,
+                   .unionByName(edges.select(F.col("dst").alias("id")))
+    parts = {
+        "orphan_edge_src":
+            edges.join(ids.withColumnRenamed("id", "src"), "src", "left_anti"),
+        "orphan_edge_dst":
+            edges.join(ids.withColumnRenamed("id", "dst"), "dst", "left_anti"),
+        # isolated: no edge touches the node (U3, pipeline.ts:88-101)
+        "isolated_nodes": nodes.filter(F.col("label") != "Corpus")
+                               .join(touched, "id", "left_anti"),
+        "duplicate_edges": edges.groupBy("type", "src", "dst").count()
+                                .filter(F.col("count") > 1),
+        "duplicate_node_ids": nodes.groupBy("id").count()
+                                   .filter(F.col("count") > 1),
     }
+    return reduce(DataFrame.crossJoin, [
+        df.agg(F.count(F.lit(1)).alias(k)) for k, df in parts.items()
+    ]).first().asDict()

@@ -29,13 +29,26 @@ choose. And ``SnapshotWriter.replace_into`` rewrites every table in
 full on each commit, so a batch-sized join plan never made a batch's
 writes batch-sized. Batch-proportional maintenance can return with
 Iceberg-v2 delete files, once passes 3-4 outgrow extraction.
+
+Fixed cost per batch, kept small:
+
+- the batch is read once: the extraction checkpoint also observes the
+  batch's doc count and supplies the url keys of the pre-batch rows, so
+  an empty batch returns before committing anything;
+- the re-derive runs at the broadcast gate the build recorded
+  (``KGPipeline``'s ``_pipeline.json``), so refreshed and rebuilt plans
+  agree;
+- generated code is reused: the session's codegen cache
+  (``session.CODEGEN_CACHE_ENTRIES``) holds a refresh's ~270 classes,
+  where Spark's default 100 recompiled all of them every batch;
+- the statistics are one query after the commits.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import extract as ex
@@ -64,26 +77,33 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
                        pages_batch: DataFrame,
                        alias_dict: DataFrame | None = None) -> dict:
     """Apply a re-crawl batch: replace its urls in ``extracted``, then
-    re-derive passes 3-4.
+    re-derive passes 3-4 at the broadcast gate the warehouse recorded.
 
     ``out_dir`` is a ``KGPipeline`` warehouse, or empty (the batch is
-    then the whole corpus and the refresh builds the KG). Returns
-    ``docs`` (distinct urls in the batch), ``affected_names`` (names the
-    batch's old or new rows mention or state) and ``docs_reresolved``
-    (every document of the re-derived ``triples_resolved``: passes 3-4
-    re-resolve the whole corpus).
+    then the whole corpus and the refresh builds the KG). An empty batch
+    commits nothing. Returns ``docs`` (distinct urls in the batch),
+    ``affected_names`` (names the batch's old or new rows mention or
+    state) and ``docs_reresolved`` (every document of the re-derived
+    ``triples_resolved``: passes 3-4 re-resolve the whole corpus).
     """
     w = SnapshotWriter(spark)
     path = os.path.join(out_dir, "extracted")
-    latest = _latest_per_url(pages_batch)
-    urls = latest.select("url")
     # pinned: replace_into plans its source twice (key set + new rows),
-    # and extraction is the one stage that must run once
+    # and extraction is the one stage that must read the batch, once.
+    # The checkpoint job also counts the batch's docs: one page row per
+    # url after _latest_per_url
+    obs = Observation()
     new_rows = ex.extract_corpus(
-        latest.select("url", "warc_ts", "html", "lang"),
-        carry_cols=["warc_ts", "lang"]).localCheckpoint()
+        _latest_per_url(pages_batch).select("url", "warc_ts", "html", "lang"),
+        carry_cols=["warc_ts", "lang"],
+    ).observe(obs, F.count_if(F.col("item") == "page").alias("docs")) \
+        .localCheckpoint()
+    docs = obs.get["docs"]
+    if docs == 0:
+        return {"docs": 0, "affected_names": 0, "docs_reresolved": 0}
     affected = _names_of(new_rows)
     if w.exists(path):
+        urls = new_rows.filter(F.col("item") == "page").select("url")
         old_rows = w.read(path).join(urls, "url", "left_semi")  # pre-batch
         affected = affected.unionByName(_names_of(old_rows))
         w.replace_into(path, new_rows, ["url"])
@@ -92,9 +112,10 @@ def refresh_from_batch(spark: SparkSession, out_dir: str,
     out = KGPipeline(spark, out_dir, alias_dict=alias_dict,
                      writer=w)._rederive_from(w.read(path))
 
-    return {
-        "docs": urls.count(),
-        "affected_names": affected.distinct().count(),
-        "docs_reresolved":
-            out["triples_resolved"].select("doc_url").distinct().count(),
-    }
+    # both counts in one query (distinct rows: a NULL counts once)
+    def n_distinct(df: DataFrame, name: str) -> DataFrame:
+        return df.distinct().agg(F.count(F.lit(1)).alias(name))
+
+    stats = n_distinct(affected, "affected_names").crossJoin(n_distinct(
+        out["triples_resolved"].select("doc_url"), "docs_reresolved"))
+    return {"docs": docs, **stats.first().asDict()}

@@ -15,7 +15,8 @@ Spark-native primitives:
 - a tiny JSON manifest (`_snapshots.json`) is the commit log: committed
   atomically via write-temp + os.replace, one entry per snapshot with
   timestamp / operation / parent / row count (rows via Observation — no
-  extra count job);
+  extra count job) / read schema (so a read infers nothing: no footer
+  job);
 - time travel = resolving the manifest by snapshot id, tag, or
   as-of-timestamp, then reading that directory;
 - MERGE INTO = a declarative full-outer upsert plan (`merge_frames`)
@@ -45,6 +46,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_snapshots.json"
 
@@ -85,6 +87,16 @@ def _commit(path: str, entries: list[dict]) -> None:
     with open(tmp, "w") as f:
         json.dump(entries, f, indent=1)
     os.replace(tmp, os.path.join(path, MANIFEST))
+
+
+def _read_schema(schema: StructType,
+                 partition_by: list[str] | None) -> StructType:
+    """The schema a partitioned parquet read yields: the data columns,
+    then the partition columns (the directory encoding moves them to
+    the tail)."""
+    pby = set(partition_by or [])
+    return StructType([f for f in schema.fields if f.name not in pby]
+                      + [f for f in schema.fields if f.name in pby])
 
 
 def merge_frames(target: DataFrame, source: DataFrame,
@@ -168,6 +180,7 @@ class SnapshotWriter:
                 "dir": f"snap-{snap_id}",
                 "tags": [tag] if tag else [],
                 "partition_by": partition_by or [],
+                "schema": _read_schema(df.schema, partition_by).jsonValue(),
             })
             _commit(path, manifest)
         return snap_id
@@ -334,14 +347,14 @@ class SnapshotWriter:
 
     def read(self, path: str, snapshot_id: int | None = None,
              tag: str | None = None,
-             as_of_ts: float | None = None, schema=None) -> DataFrame:
-        """``schema``: a caller that just wrote the table may supply the
-        known schema to skip the footer-inference job (one fewer
-        driver-latency job per committed pipeline pass)."""
+             as_of_ts: float | None = None) -> DataFrame:
+        """The snapshot's rows under the schema its commit recorded, so
+        no footer-inference job runs; a snapshot committed before the
+        manifest carried a schema is read by inference."""
         e = self._resolve(path, snapshot_id, tag, as_of_ts)
         r = self.spark.read
-        if schema is not None:
-            r = r.schema(schema)
+        if "schema" in e:
+            r = r.schema(StructType.fromJson(e["schema"]))
         return r.parquet(os.path.join(path, e["dir"]))
 
     def rows(self, path: str, snapshot_id: int | None = None) -> int:

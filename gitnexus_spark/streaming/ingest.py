@@ -51,8 +51,8 @@ def start_full_refresh_stream(pages_stream: DataFrame, kg_out_dir: str,
     from ..plans.refresh import refresh_from_batch
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe: the refresh reads the micro-batch once, and
+        # an empty one commits nothing
         refresh_from_batch(batch_df.sparkSession, kg_out_dir, batch_df,
                            alias_dict=alias_dict)
 

@@ -126,3 +126,30 @@ def test_resume_gate_reads_manifest_rows(spark, sf_dir, tmp_path):
         pipe._load_or("name_links", None)   # resumed: no builder runs
         assert pipe._rows["name_links"] == rows > 0
         assert (pipe._dim_hint(dim, "name_links") is not dim) == hinted
+
+
+def test_refresh_rederives_at_the_build_gate(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """A warehouse built at a tiny broadcast gate is refreshed at that
+    gate: the refresh's name-map joins stay unhinted (at the default
+    64 MiB gate they would all be broadcast)."""
+    from gitnexus_spark.plans.pipeline import KGPipeline
+    from gitnexus_spark.plans.refresh import refresh_from_batch
+    from gitnexus_spark.synthetic import synth_pages
+
+    pages = synth_pages(spark, sf_dir).limit(20).localCheckpoint()
+    out = str(tmp_path / "kg")
+    KGPipeline(spark, out, broadcast_max_bytes=1).run(pages)
+
+    decisions = []
+    dim_hint = KGPipeline._dim_hint
+
+    def spy(self, df, *dims, **kw):
+        hinted = dim_hint(self, df, *dims, **kw)
+        decisions.append((dims, hinted is not df))
+        return hinted
+
+    monkeypatch.setattr(KGPipeline, "_dim_hint", spy)
+    refresh_from_batch(spark, out, pages.limit(2))
+    name_map_joins = [h for dims, h in decisions if "name_links" in dims]
+    assert name_map_joins and not any(name_map_joins), decisions

@@ -221,3 +221,30 @@ def test_optimize_layout_artifacts(spark, pipeline_out):
     got_ids = {r["id"] for r in
                search_with_index(spark, nodes, ip, "E4").collect()}
     assert got_ids == want and len(want) > 0
+
+
+def test_integrity_counters_on_a_corrupted_graph(spark):
+    """A hand-corrupted graph pins each counter at its own nonzero
+    value: one edge from a missing node, two edges to missing nodes,
+    three untouched non-Corpus nodes (the untouched Corpus node does not
+    count), four (type, src, dst) groups stated more than once and five
+    node ids stated twice."""
+    from gitnexus_spark.plans.pipeline import integrity_checks
+
+    dup = [f"d{k}" for k in range(1, 6)]
+    nodes = spark.createDataFrame(
+        [("c", "Corpus", "c", None), ("a", "Page", "a", "u")]
+        + [(d, "Entity", d, None) for d in dup] * 2
+        + [(i, "Entity", i, None) for i in ("i1", "i2", "i3")],
+        "id string, label string, name string, url string")
+    rows = [("MENTIONS", "a", d) for d in dup]
+    rows += [("LINKS_TO", "a", d) for d in ("d1", "d1", "d2", "d2", "d3",
+                                             "d3", "d3", "d4", "d4")]
+    rows += [("MENTIONS", "x", "a"),                         # orphan src
+             ("MENTIONS", "a", "y"), ("MENTIONS", "a", "z")]  # orphan dst
+    edges = spark.createDataFrame(
+        [(f"e{n}", t, s, d, 1.0) for n, (t, s, d) in enumerate(rows)],
+        "id string, type string, src string, dst string, confidence double")
+    assert integrity_checks(nodes, edges) == {
+        "orphan_edge_src": 1, "orphan_edge_dst": 2, "isolated_nodes": 3,
+        "duplicate_edges": 4, "duplicate_node_ids": 5}

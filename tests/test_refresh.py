@@ -348,3 +348,64 @@ def test_refresh_equals_rebuild_on_generators(spark, tmp_path, workload,
         == _resolved_set(full["triples_resolved"])
     assert {tuple(r) for r in cur("canonical_map").collect()} \
         == {tuple(r) for r in full["canonical_map"].collect()}
+
+
+def _pages(spark, rows):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [(u, dt.datetime(2024, 1, day), f"<p>{t}</p>".encode(), t, "en")
+         for u, day, t in rows], PAGES_DDL)
+
+
+def test_refresh_statistics_pinned(spark, tmp_path):
+    """Every refresh statistic on a hand-checked fixture. The batch
+    re-crawls u1 and brings a new url u4 twice (the older fetch loses).
+    ``affected_names``: the new rows' names {Acme, Omega, Sigma, Delta}
+    plus old u1's {Acme, Zorg, This} ('This' is a stop entity, so it is
+    no mention, but it is a triple subject) = 6. ``docs_reresolved``:
+    the documents of the re-derived triples_resolved = u1-u4 (u5 states
+    no triple) = 4."""
+    from gitnexus_spark.plans.pipeline import KGPipeline
+    from gitnexus_spark.plans.refresh import refresh_from_batch
+
+    out = str(tmp_path / "kg")
+    KGPipeline(spark, out).run(_pages(spark, [
+        ("u1", 1, "Acme founded Zorg. This visited Acme."),
+        ("u2", 1, "Beta acquired Gamma."),
+        ("u3", 1, "Delta endorsed Beta."),
+        ("u5", 1, "Nothing happened."),
+    ]))
+    stats = refresh_from_batch(spark, out, _pages(spark, [
+        ("u1", 2, "Acme acquired Omega."),
+        ("u4", 3, "Sigma joined Delta."),
+        ("u4", 2, "Kappa left Delta."),
+    ]))
+    assert stats == {"docs": 2, "affected_names": 6, "docs_reresolved": 4}
+
+
+def test_second_refresh_reuses_compiled_code(spark, base, tmp_path):
+    """Two consecutive refreshes on one session: the second compiles
+    (Janino, read from CodegenMetrics) only a small fraction of what the
+    first did, because the codegen cache holds a refresh's working set
+    (about 270 classes; Spark's default cache holds 100)."""
+    import shutil
+
+    from gitnexus_spark.plans.refresh import refresh_from_batch
+    from gitnexus_spark.synthetic import alias_dictionary
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    out = str(tmp_path / "kg")
+    shutil.copytree(base["out"], out)
+    counts = []
+    for text in ("Entity_Zz9 founded Entity_20.",
+                 "Entity_Zz8 acquired Entity_21."):
+        before = compiles()
+        refresh_from_batch(spark, out, _recrawl_row(spark, base["row"], text),
+                           alias_dict=alias_dictionary(spark))
+        counts.append(compiles() - before)
+    assert counts[1] <= 40, counts

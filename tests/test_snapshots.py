@@ -238,3 +238,38 @@ def test_snapshot_diff_one_to_many_order_insensitive(spark, writer, tmp_path):
     got = {(r["doc_id"], r["_change"])
            for r in writer.diff(t, 1, 2, ["doc_id"]).collect()}
     assert got == {(2, "deleted")}
+
+
+def test_read_uses_recorded_schema_without_a_job(spark, writer, tmp_path):
+    """The manifest records each snapshot's read schema (data columns,
+    then partition columns), so read() of a partitioned table submits no
+    Spark job; a manifest entry without the field still reads."""
+    import json
+
+    t = str(tmp_path / "tbl")
+    writer.write(_df(spark, [(1, "en", 10), (2, "de", 20)]), t,
+                 partition_by=["lang"])
+    want = [("doc_id", "bigint"), ("n", "bigint"), ("lang", "string")]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "read only")
+    try:
+        df = writer.read(t)
+        got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("snapshot-read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert got == want
+    assert sorted(map(tuple, df.collect())) == [(1, 10, "en"), (2, 20, "de")]
+
+    manifest = os.path.join(t, "_snapshots.json")
+    with open(manifest) as f:
+        entries = json.load(f)
+    del entries[-1]["schema"]
+    with open(manifest, "w") as f:
+        json.dump(entries, f)
+    assert [f.name for f in writer.read(t).schema.fields] == \
+        ["doc_id", "n", "lang"]
+    assert writer.read(t).count() == 2

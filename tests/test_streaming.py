@@ -277,3 +277,45 @@ def test_full_refresh_stream_updates_graph(spark, stream_dirs, tmp_path):
              w.read(f"{out}/nodes").filter("label='Entity'").collect()}
     assert "Zorg" not in names                        # orphan retired
     assert {"Acme", "Beta"} <= names
+
+
+def test_refresh_stream_reads_each_micro_batch_once(spark, stream_dirs):
+    """The refresh sink scans a micro-batch's input once: the progress
+    reports ``numInputRows`` equal to the file's row count (3, then 1 on
+    a restart), and an empty micro-batch adds no snapshot to any
+    table."""
+    import datetime as dt
+    import os
+
+    from gitnexus_spark.sources.snapshots import SnapshotWriter
+    from gitnexus_spark.streaming.ingest import (read_page_stream,
+                                                 start_full_refresh_stream)
+
+    ts = dt.datetime(2024, 1, 1)
+    files = [
+        [("u1", ts, b"<p>Acme founded Zorg.</p>", "Acme founded Zorg.", "en"),
+         ("u2", ts, b"<p>Beta visited Acme.</p>", "Beta visited Acme.", "en"),
+         ("u1", ts, b"<p>Acme founded Zorg.</p>", "Acme founded Zorg.", "en")],
+        [("u3", ts, b"<p>Gamma acquired Beta.</p>", "Gamma acquired Beta.",
+          "en")],
+        [],
+    ]
+    out, w = stream_dirs["out"], SnapshotWriter(spark)
+
+    def snapshots():
+        return {t: len(w.history(os.path.join(out, t)))
+                for t in os.listdir(out) if w.exists(os.path.join(out, t))}
+
+    seen = []
+    for rows in files:
+        _write_batch(spark, stream_dirs["in"], rows)
+        q = start_full_refresh_stream(
+            read_page_stream(spark, stream_dirs["in"]), out,
+            stream_dirs["ckpt"])
+        q.awaitTermination(300)
+        seen.append(([p["numInputRows"] for p in q.recentProgress],
+                     snapshots()))
+    assert [n for n, _ in seen] == [[3], [1], [0]]
+    assert set(seen[0][1].values()) == {1}      # the first batch builds
+    assert set(seen[1][1].values()) == {2}      # the second refreshes
+    assert seen[2][1] == seen[1][1]             # the empty one commits none
